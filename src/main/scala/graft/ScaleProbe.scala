@@ -55,8 +55,12 @@ object ScaleProbe {
       val parts = if (srcFile.isDirectory)
         Option(srcFile.listFiles).map(_.toSeq.sortBy(_.getName)).getOrElse(Nil)
       else Seq(srcFile)
-      val stamp = java.lang.Integer.toHexString(
-        parts.map(x => (x.getName, x.length, x.lastModified)).hashCode)
+      // SHA-256 of the full (name, length, mtime) tuple list, like
+      // Registry.sourceStamp: a 32-bit hashCode can collide silently
+      val stamp = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(parts.map(x => s"${x.getName}\u0000${x.length}\u0000${x.lastModified}")
+          .mkString("\n").getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString
       val path = s"/tmp/graft_scaleprobe_${name}_${rep}_${stamp}_" +
         sfDir.replaceAll("[^0-9a-zA-Z]", "_")
       val marker = new java.io.File(path, "_graft_ready")

@@ -67,7 +67,7 @@ object GraftBloom {
   /** [[columns]] from a path string — the driver-side factory-construction
     * convenience (one sidecar read per WRITE, never per task). */
   def columnsOf(path: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     columns(fs, new Path(path))
   }
 
@@ -177,8 +177,7 @@ object GraftBloom {
     * blooms/stats / unsupported types answer "maybe" (file kept). */
   def fileMightMatch(conf: Configuration, file: String,
       atoms: Seq[SkipAtom]): Boolean = {
-    val pfr = ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(file), conf))
+    val pfr = GraftHadoop.openFooter(new Path(file), conf)
     try {
       val schema = pfr.getFooter.getFileMetaData.getSchema
       val groups = pfr.getRowGroups

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.Transform
@@ -72,7 +71,7 @@ class GraftCatalog extends TableCatalog
     (warehouse +: ident.namespace().toSeq :+ ident.name()).mkString("/")
 
   private def fs(): FileSystem =
-    FileSystem.get(new java.net.URI(warehouse), new Configuration())
+    GraftHadoop.fs(warehouse)
 
   private def exists(ident: Identifier): Boolean =
     fs().exists(new Path(s"${pathOf(ident)}/_graft_schema.json"))
@@ -645,7 +644,7 @@ class GraftZOrderProcedure(cat: GraftCatalog)
           s"system.zorder: $c is ${f.dataType.simpleString}; the zvalue " +
             "kernel interleaves bigint columns")
       }
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       GraftZOrder.register(fs, new Path(path), cols)
       // rewrite every occupied cell as its z-sorted self: dynamic
       // overwrite replaces exactly the cells the (full-content) write
@@ -738,7 +737,7 @@ class GraftRegridProcedure(cat: GraftCatalog)
           .limit(1).isEmpty,
         "system.regrid: a bucket expression produced NULL — every row " +
           "must map to a cell; guard the expression (e.g. coalesce)")
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       val stage = new Path(path + "__regrid_stage")
       fs.delete(stage, true)
@@ -808,7 +807,7 @@ class GraftSetBloomProcedure(cat: GraftCatalog)
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val cols = input.getUTF8String(1).toString
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       GraftBloom.register(fs, new Path(path), cols)
       GraftProcedures.scanOf(
         StructType(Seq(StructField("bloom_columns",
@@ -854,7 +853,7 @@ class GraftRemoveOrphansProcedure(cat: GraftCatalog)
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val hours = input.getInt(1)
       require(hours >= 0, "remove_orphans: older_than_hours must be >= 0")
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       val victims =
         GraftVersions.orphanFiles(fs, root, hours.toLong * 3600L * 1000L)
@@ -941,7 +940,7 @@ class GraftCleanStagesProcedure(cat: GraftCatalog)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val hours = input.getInt(1)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val p = new Path(path)
       val prefix = p.getName + "__graft_"
       val cutoff = System.currentTimeMillis() - hours * 3600000L
@@ -981,7 +980,7 @@ class GraftVersionsProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       val schema = StructType(Seq(
         StructField("version", org.apache.spark.sql.types.LongType, nullable = false),
@@ -1034,7 +1033,7 @@ class GraftRollbackProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val newV = GraftVersions.rollback(fs, new Path(path), input.getLong(1))
       GraftProcedures.singleRow("new_version", newV)
     }
@@ -1067,7 +1066,7 @@ class GraftRewriteManifestsProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val newV = GraftVersions.rewriteManifests(fs, new Path(path))
       GraftProcedures.singleRow("new_version", newV)
     }
@@ -1100,7 +1099,7 @@ class GraftExpireVersionsProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val n = GraftVersions.expire(fs, new Path(path), input.getInt(1))
       GraftProcedures.singleRow("expired_manifests", n)
     }
@@ -1140,7 +1139,7 @@ class GraftSetRetentionProcedure(cat: GraftCatalog)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val keep = input.getInt(1)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       GraftVersions.setRetention(fs, new Path(path), keep)
       GraftProcedures.singleRow("retention_keep", math.max(keep, 0).toLong)
     }
@@ -1180,7 +1179,7 @@ class GraftSetCompactionProcedure(cat: GraftCatalog)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val maxFiles = input.getInt(1)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       GraftVersions.setCompaction(fs, new Path(path), maxFiles)
       GraftProcedures.singleRow("compaction_max_files",
         math.max(maxFiles, 0).toLong)
@@ -1293,7 +1292,7 @@ class GraftCompactProcedure(cat: GraftCatalog)
       val maxFiles = input.getInt(1)
       val maxDeletedPct = input.getInt(2)
       val path = cat.tablePath(table)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       // LIVE-cell counts (manifest-resolved when authoritative) — a
       // retired-in-place file is not fragmentation. A cell whose deletion
@@ -1351,7 +1350,7 @@ class GraftStatsProcedure(cat: GraftCatalog)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val table = input.getUTF8String(0).toString
       val path = cat.tablePath(table)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       val schema = StructType(Seq(
         StructField("cell", org.apache.spark.sql.types.StringType, nullable = false),
@@ -1411,7 +1410,7 @@ class GraftTagProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val v = input.getLong(2)
       GraftVersions.setTag(fs, new Path(path),
         input.getUTF8String(1).toString, v)
@@ -1442,7 +1441,7 @@ class GraftDropTagProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val dropped = GraftVersions.dropTag(fs, new Path(path),
         input.getUTF8String(1).toString)
       GraftProcedures.singleRow("dropped", if (dropped) 1L else 0L)
@@ -1469,7 +1468,7 @@ class GraftTagsProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val schema = StructType(Seq(
         StructField("tag", org.apache.spark.sql.types.StringType, nullable = false),
         StructField("version", org.apache.spark.sql.types.LongType, nullable = false)))
@@ -1522,7 +1521,7 @@ class GraftBranchProcedure(cat: GraftCatalog, val op: String)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val name = input.getUTF8String(1).toString
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val root = new Path(path)
       op match {
         case "branch" =>
@@ -1579,7 +1578,7 @@ class GraftPublishProcedure(cat: GraftCatalog)
           // forked this branch
           cat.listTables(Array.empty).toSeq.map(_.name).filter { t =>
             val p = cat.tablePath(t)
-            val fs = FileSystem.get(new java.net.URI(p), new Configuration())
+            val fs = GraftHadoop.fs(p)
             GraftVersions.branchFork(fs, new Path(p), branch).isDefined
           }.sorted
       }
@@ -1587,7 +1586,7 @@ class GraftPublishProcedure(cat: GraftCatalog)
         s"graft publish: no table in this catalog has a branch '$branch'")
       val tables = names.map { t =>
         val p = cat.tablePath(t)
-        (FileSystem.get(new java.net.URI(p), new Configuration()), new Path(p))
+        (GraftHadoop.fs(p), new Path(p))
       }
       val versions = GraftVersions.fastForwardAll(tables, branch)
       val schema = StructType(Seq(
@@ -1619,7 +1618,7 @@ class GraftBranchesProcedure(cat: GraftCatalog)
     override def call(input: org.apache.spark.sql.catalyst.InternalRow)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       val schema = StructType(Seq(
         StructField("branch", org.apache.spark.sql.types.StringType, nullable = false),
         StructField("fork_version", org.apache.spark.sql.types.LongType,
@@ -1730,7 +1729,7 @@ private[sources] object GraftMetaTable {
   }
 
   def rowsOf(path: String, meta: String): Array[InternalRow] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     def cellOf(b: Map[String, Long]): UTF8String = UTF8String.fromString(
       b.toSeq.sortBy(_._1.drop(1).toInt)
@@ -1852,7 +1851,7 @@ class GraftSetStatsProcedure(cat: GraftCatalog)
         : java.util.Iterator[org.apache.spark.sql.connector.read.Scan] = {
       val path = cat.tablePath(input.getUTF8String(0).toString)
       val value = input.getUTF8String(1).toString.trim
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       GraftStats.declare(fs, new Path(path), value)
       GraftProcedures.singleRow("stats_declared", 1L)
     }

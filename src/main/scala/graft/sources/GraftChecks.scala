@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BindReferences, Expression, IsNull, Or}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
@@ -52,7 +51,7 @@ private[graft] object GraftChecks {
   def set(spark: SparkSession, path: String, name: String, sql: String): Long = {
     require(NamePat.matcher(name).matches(),
       s"graft check name '$name' (want [A-Za-z][A-Za-z0-9._-]*)")
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val schema = GraftDataSource.sidecarSchema(path)
     // fail fast on an unresolvable expression, with the analyzer's error
     resolve(spark, sql, schema)
@@ -74,13 +73,13 @@ private[graft] object GraftChecks {
   }
 
   def drop(path: String, name: String): Boolean = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     fs.delete(new Path(dirOf(new Path(path)), name), false)
   }
 
   /** (name, expr) pairs, name-ordered. */
   def list(path: String): Seq[(String, String)] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val d = dirOf(new Path(path))
     val entries = try fs.listStatus(d)
       catch { case _: java.io.FileNotFoundException => return Nil }

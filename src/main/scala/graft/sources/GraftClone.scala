@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Zero-copy READ-ONLY clones: a stable table NAME for one committed
@@ -43,7 +42,7 @@ object GraftClone {
   val PointerName = "_graft_clone"
 
   private def fsOf(p: Path): FileSystem =
-    FileSystem.get(p.toUri, new Configuration())
+    GraftHadoop.fs(p)
 
   /** The clone pointer of `root`, if `root` is a clone. */
   def pointer(fs: FileSystem, root: Path): Option[(String, Long)] = {

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -63,7 +62,7 @@ private[graft] object GraftColStats {
   private def fileOf(path: String) = new Path(path, FileName)
 
   private def fsOf(path: String): FileSystem =
-    FileSystem.get(new java.net.URI(path), new Configuration())
+    GraftHadoop.fs(path)
 
   /** Types whose min/max are computed, persisted, and served. Floating
     * bounds need the NaN-free projection at aggregation time (Spark's

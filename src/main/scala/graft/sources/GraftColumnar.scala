@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapred.FileSplit
 import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -55,6 +55,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * semantics want whole row groups, and the skipping that matters at
   * 100 TB (files via blooms/zone maps, row groups via stats) happens
   * before any page is read.
+  *
+  * Per-file work is the footer open and the decode only. The Hadoop conf is
+  * the session's, shipped once per scan by [[GraftReaderFactory]]; the
+  * reader clones it only to set the keys the vectorized reader consults, and
+  * opens the footer with read options built from it ([[GraftHadoop]]). No
+  * default Hadoop XML is parsed per file.
   */
 object GraftColumnar {
   /** Session escape hatch, mirroring Spark's own vectorized-reader flag. */
@@ -87,11 +93,12 @@ object GraftColumnar {
 
 class GraftColumnarPartitionReader(p: GraftInputPartition,
     required: StructType,
+    // the scan's shipped session conf, shared across tasks: read-only here
+    shared: Configuration,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReader[ColumnarBatch] {
 
-  private val conf = new Configuration()
   private var reader: VectorizedParquetRecordReader = _
   private var out: ColumnarBatch = _
   // required-order view through the dv survivor mapping (dv'd files only)
@@ -114,15 +121,15 @@ class GraftColumnarPartitionReader(p: GraftInputPartition,
 
   locally {
     val filePath = new Path(p.file)
-    val inFile = HadoopInputFile.fromPath(filePath, conf)
-    val pfr = ParquetFileReader.open(inFile)
+    val inFile = HadoopInputFile.fromPath(filePath, shared)
+    val pfr = GraftHadoop.openFooter(inFile)
     val (fileSchema, fileLen, footer, rowCount) =
       try (pfr.getFooter.getFileMetaData.getSchema, inFile.getLength,
         pfr.getFooter, pfr.getRecordCount)
       finally pfr.close()
     if (p.dvPath != null) {
       val dvP = new Path(p.dvPath)
-      dv = GraftDv.read(dvP.getFileSystem(conf), dvP)
+      dv = GraftDv.read(dvP.getFileSystem(shared), dvP)
     }
 
     def fieldInFile(name: String): Option[String] =
@@ -187,6 +194,7 @@ class GraftColumnarPartitionReader(p: GraftInputPartition,
     } else {
 
     // ---- hadoop conf the vectorized reader's ReadSupport consults ----
+    val conf = new Configuration(shared)
     conf.set(ParquetInputFormat.READ_SUPPORT_CLASS,
       classOf[org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport]
         .getName)

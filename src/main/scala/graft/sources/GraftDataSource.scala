@@ -4,10 +4,9 @@ import java.util.regex.Pattern
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
@@ -75,7 +74,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
     val pin = Option(properties.get("graft.snapshot")).map { v =>
       val root = new Path(properties.get("path"))
       GraftPin(GraftVersions.resolveVersion(
-        FileSystem.get(root.toUri, new Configuration()), root, v))
+        GraftHadoop.fs(root), root, v))
     }
       .orElse(Option(properties.get("graft.changes")).map { s =>
         s.split(",", 2) match {
@@ -90,7 +89,7 @@ class GraftDataSource extends TableProvider with DataSourceRegister {
       .orElse {
         val root = new Path(properties.get("path"))
         GraftClone.pointer(
-          FileSystem.get(root.toUri, new Configuration()), root)
+          GraftHadoop.fs(root), root)
           .map { case (src, v) => GraftClonePin(src, v) }
       }
       // option("graft.branch", b): read/append against a WAP branch's head
@@ -163,7 +162,7 @@ private[graft] final case class GraftClonePin(src: String, v: Long)
   def files(fs: FileSystem, root: Path,
       pushed: Array[Filter]): Seq[(Path, Map[String, Long], GraftVersions.ManifestEntry)] = {
     val sroot = new Path(src)
-    val sfs = FileSystem.get(sroot.toUri, new Configuration())
+    val sfs = GraftHadoop.fs(sroot)
     GraftVersions.snapshotFiles(sfs, sroot, v, pushed)
   }
 }
@@ -172,7 +171,7 @@ object GraftDataSource {
   private[sources] val BucketCol = Pattern.compile("^c\\d+$")
 
   def sidecarSchema(path: String): StructType = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val p = new Path(s"$path/_graft_schema.json")
     require(fs.exists(p), s"no _graft_schema.json under $path — not a world?")
     val in = fs.open(p)
@@ -189,7 +188,7 @@ object GraftDataSource {
     * or a previous write's) stays authoritative for readers of data already
     * on disk. */
   private[sources] def writeSidecarIfAbsent(path: String, schema: StructType): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val p = new Path(s"$path/_graft_schema.json")
     if (!fs.exists(p)) {
       val out = fs.create(p, false)
@@ -212,7 +211,7 @@ object GraftDataSource {
 
   /** current name → aliases, NEWEST FIRST (a→b→c stores c → [b, a]). */
   def renamesOf(path: String): Map[String, Seq[String]] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val p = new Path(path, RenamesSidecarName)
     if (!fs.exists(p)) Map.empty
     else {
@@ -229,7 +228,7 @@ object GraftDataSource {
 
   private[sources] def writeRenames(path: String,
       m: Map[String, Seq[String]]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val p = new Path(path, RenamesSidecarName)
     if (m.isEmpty) { fs.delete(p, false); return }
     val out = fs.create(p, true)
@@ -751,8 +750,7 @@ class GraftTable(path: String, schema: StructType,
       : Unit = {
     readOnly("DELETE")
     wapGuard("DELETE")
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(path), new org.apache.hadoop.conf.Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new org.apache.hadoop.fs.Path(path)
     if (fs.exists(root)) {
       // versioned commit: the dropped chunks' files fall out of the sealed
@@ -992,7 +990,7 @@ class GraftScanBuilder(path: String, schema: StructType,
   }
 
   private def anyDeletionVectors: Boolean = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val entries = pin match {
       case Some(tp) => tp.files(fs, root, Array.empty).map(_._3)
@@ -1049,7 +1047,7 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
   // walk otherwise), or the version pin's manifest-resolved files (footer
   // metadata reads work identically on retired-in-place files)
   @transient private lazy val files: Seq[(Path, Map[String, Long], Long, Long)] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     pin match {
       case Some(p) => p.files(fs, new Path(path), pushed)
         .map { case (f, b, e) => (f, b, e.rows, e.dv.map(_._2).getOrElse(0L)) }
@@ -1089,7 +1087,7 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftAggReaderFactory(aggs, StructType(tableSchema.fields
       .filter(f => !GraftDataSource.isBucket(f.name)).toSeq),
-      GraftDataSource.renamesOf(path))
+      GraftHadoop.ship(), GraftDataSource.renamesOf(path))
 }
 
 final case class GraftAggPartition(file: String, groupVals: Array[Long],
@@ -1112,6 +1110,7 @@ final case class GraftAggPartition(file: String, groupVals: Array[Long],
   * answer from metadata. Distinguishes "all values null" (numNulls set and
   * equal to the value count → partial NULL / 0) from "no stats" (fallback). */
 class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
+    hadoopConf: GraftHadoop.Shipped,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -1138,9 +1137,7 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
             case PMax(c)    => if (live == 0L) null else p.buckets(c)
           }.toArray
         }
-        val conf = new Configuration()
-        val pfr = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(p.file), conf))
+        val pfr = GraftHadoop.openFooter(new Path(p.file), hadoopConf.value)
         // a RENAMED column's stats/sums live under the name this file was
         // written with — resolve once per file (identity when no renames)
         val footerSchema = pfr.getFooter.getFileMetaData.getSchema
@@ -1256,9 +1253,7 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
           case PMax(c) if !GraftDataSource.isBucket(c)   => c
           case PSum(c) if !GraftDataSource.isBucket(c)   => c
         }.distinct.filter(dataSchema.fieldNames.contains)
-        val conf = new Configuration()
-        val inFile = HadoopInputFile.fromPath(new Path(p.file), conf)
-        val pfr = ParquetFileReader.open(inFile)
+        val pfr = GraftHadoop.openFooter(new Path(p.file), hadoopConf.value)
         val fileSchema = pfr.getFooter.getFileMetaData.getSchema
         val rowCount = pfr.getRecordCount
         pfr.close()
@@ -1276,6 +1271,7 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
           val projection = new MessageType("graft_agg_projection",
             present.map { case (_, fc) =>
               fileSchema.getFields.get(fileSchema.getFieldIndex(fc)) }: _*)
+          val conf = new Configuration(hadoopConf.value)
           conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
           val reader = ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
             .withConf(conf).build()
@@ -1383,7 +1379,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
   // pinned plan: manifest-resolved (file, buckets) pairs surviving the
   // pushed bucket filters — the version-log substitute for the live walk
   @transient private lazy val pinnedWalk: Seq[(Path, Map[String, Long], GraftVersions.ManifestEntry)] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     pin.get.files(fs, new Path(path), pushed)
   }
 
@@ -1406,7 +1402,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
   private val RuntimeKeyCap = 1024
 
   @transient private lazy val skipCols: Set[String] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     GraftBloom.columns(fs, new Path(path)).toSet
   }
 
@@ -1457,7 +1453,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
   private def liveCellList()
       : Seq[(Path, Map[String, Long], Seq[GraftDataSource.FileRef])] = {
     if (cachedCells == null) {
-      val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+      val fs = GraftHadoop.fs(path)
       cachedCells = GraftDataSource.liveCells(fs, new Path(path), pushed ++ runtime)
     }
     cachedCells
@@ -1509,7 +1505,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     * `numRows` left unreported exactly like vanilla parquet. */
   override def estimateStatistics(): Statistics = {
     import scala.collection.parallel.CollectionConverters._
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val bytes =
       if (pin.isDefined)
         pinnedWalk.map { case (f, _, e) =>
@@ -1599,7 +1595,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     * this scan is a point lookup or registered-column range scan that
     * file-level skipping can serve. */
   @transient private lazy val bloomAtoms: Seq[GraftBloom.SkipAtom] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val cols = GraftBloom.columns(fs, new Path(path)).toSet
     if (cols.isEmpty) Nil else GraftBloom.skipAtoms(residual, cols)
   }
@@ -1639,7 +1635,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     if (atoms.isEmpty) zoned.map { case (f, b, _, dv, _) => (f, b, dv) }
     else {
       import scala.collection.parallel.CollectionConverters._
-      val conf = new Configuration()
+      val conf = GraftHadoop.conf
       zoned.par.filter { case (f, _, _, _, _) =>
         GraftBloom.fileMightMatch(conf, f, atoms)
       }.seq.map { case (f, b, _, dv, _) => (f, b, dv) }
@@ -1707,8 +1703,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
           if (keep) cum += files.map { fr =>
             if (fr.liveRows >= 0L) fr.liveRows
             else {
-              val pfr = ParquetFileReader.open(
-                HadoopInputFile.fromPath(fr.path, new Configuration()))
+              val pfr = GraftHadoop.openFooter(fr.path, GraftHadoop.conf)
               (try pfr.getRecordCount finally pfr.close()) -
                 fr.dv.map(_._2).getOrElse(0L)
             }
@@ -1749,17 +1744,17 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, residual,
-      GraftDataSource.renamesOf(path))
+    new GraftReaderFactory(required, GraftHadoop.ship(), residual, renameAliases)
 }
 
 class GraftReaderFactory(required: StructType,
+    hadoopConf: GraftHadoop.Shipped,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], required,
-      residual, aliases)
+      hadoopConf.value, residual, aliases)
 
   // r17 vectorized path: the flag is stamped scan-uniformly at planning
   // (see GraftInputPartition.columnar), so a scan is all-columnar or
@@ -1769,7 +1764,8 @@ class GraftReaderFactory(required: StructType,
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarPartitionReader(
-      partition.asInstanceOf[GraftInputPartition], required, residual, aliases)
+      partition.asInstanceOf[GraftInputPartition], required, hadoopConf.value,
+      residual, aliases)
 }
 
 /** Reads one chunk file with parquet-hadoop's Group API, projecting to the
@@ -1783,11 +1779,12 @@ class GraftReaderFactory(required: StructType,
   * the same filters above the scan, so the predicate only ever has to keep
   * a superset. */
 class GraftPartitionReader(p: GraftInputPartition, required: StructType,
+    // the scan's shipped session conf, shared across tasks: read-only here
+    shared: Configuration,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
   private var reader: ParquetReader[Group] = _
   private var cur: Group = _
   private var remainingCountRows = 0L
@@ -1806,14 +1803,13 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
   private var curOrdinal = -1L
 
   locally {
-    val inFile = HadoopInputFile.fromPath(new Path(p.file), conf)
-    val pfr = ParquetFileReader.open(inFile)
+    val pfr = GraftHadoop.openFooter(new Path(p.file), shared)
     val fileSchema: MessageType = pfr.getFooter.getFileMetaData.getSchema
     val rowCount = pfr.getRecordCount
     pfr.close()
     if (p.dvPath != null) {
       val dvP = new Path(p.dvPath)
-      dv = GraftDv.read(dvP.getFileSystem(conf), dvP)
+      dv = GraftDv.read(dvP.getFileSystem(shared), dvP)
     }
     // the CDC tag is a partition constant ONLY on change-feed reads: a
     // table whose own data carries a _change_type column still reads it as
@@ -1863,6 +1859,7 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
       val projection = new MessageType("graft_projection",
         dataFields.toSeq.flatMap(f => fieldInFile(f.name))
           .map(rn => fileSchema.getFields.get(fileSchema.getFieldIndex(rn))): _*)
+      val conf = new Configuration(shared)
       conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
       val types = required.fields
         .map(f => f.name -> f.dataType).toMap

@@ -4,8 +4,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.hadoop.example.{GroupReadSupport, GroupWriteSupport}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.hadoop.ParquetReader
 
 /** MERGE-ON-READ DELETION VECTORS — the storage piece that makes a
   * selective row-level DELETE metadata-cheap instead of whole-chunk
@@ -179,21 +178,23 @@ private[graft] object GraftDv {
       : Seq[GraftVersions.ManifestEntry] = {
     if (jobs.isEmpty) return Seq.empty
     val rootStr = root.toString
+    val hadoopConf = GraftHadoop.ship()
     spark.sparkContext.parallelize(jobs, jobs.size)
-      .map { case (rel, pos) => rewriteOne(rootStr, rel, pos, statsWanted) }
+      .map { case (rel, pos) =>
+        rewriteOne(hadoopConf.value, rootStr, rel, pos, statsWanted) }
       .collect().toSeq.flatten
   }
 
-  private def rewriteOne(rootStr: String, rel: String, positions: Array[Long],
-      statsWanted: Option[Option[Set[String]]])
+  private def rewriteOne(shared: Configuration, rootStr: String, rel: String,
+      positions: Array[Long], statsWanted: Option[Option[Set[String]]])
       : Option[GraftVersions.ManifestEntry] = {
-    val conf = new Configuration()
+    val conf = new Configuration(shared)
     val fs = FileSystem.get(new java.net.URI(rootStr), conf)
     val root = new Path(rootStr)
     val src = new Path(root, rel)
     val dst = new Path(src.getParent,
       s"part-dvc-${java.util.UUID.randomUUID()}.parquet")
-    val pfr = ParquetFileReader.open(HadoopInputFile.fromPath(src, conf))
+    val pfr = GraftHadoop.openFooter(src, conf)
     val schema = try pfr.getFooter.getFileMetaData.getSchema finally pfr.close()
     GroupWriteSupport.setSchema(schema, conf)
     val writer = new GraftParquetWriterBuilder(dst, new GroupWriteSupport())

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.procedures._
@@ -51,7 +50,7 @@ private[sources] object GraftIndexDescriptor {
   /** Persist the build-time configuration (simple `k=v` lines — the same
     * no-parser discipline as the name-encoded retention markers). */
   def write(idx: String, kv: Map[String, String]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(idx), new Configuration())
+    val fs = GraftHadoop.fs(idx)
     val p = new Path(idx + "__meta", File)
     fs.mkdirs(p.getParent)
     val out = fs.create(p, true)
@@ -62,7 +61,7 @@ private[sources] object GraftIndexDescriptor {
   }
 
   def read(idx: String): Map[String, String] = {
-    val fs = FileSystem.get(new java.net.URI(idx), new Configuration())
+    val fs = GraftHadoop.fs(idx)
     val p = new Path(idx + "__meta", File)
     require(fs.exists(p),
       s"graft index at $idx has no descriptor — was it built through " +
@@ -184,8 +183,7 @@ class GraftIndexVectorProcedure(cat: GraftCatalog) extends UnboundProcedure {
       // footer stats/dictionaries; files written after this commit carry
       // real bloom pages.
       if (input.getBoolean(10)) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(base), spark.sparkContext.hadoopConfiguration)
+        val fs = GraftHadoop.fs(base)
         val root = new org.apache.hadoop.fs.Path(base)
         if (GraftBloom.columns(fs, root).isEmpty)
           GraftBloom.register(fs, root, Seq(idCol))

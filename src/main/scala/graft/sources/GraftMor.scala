@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.write.WriterCommitMessage
 import org.apache.spark.sql.functions.col
@@ -75,7 +74,7 @@ object GraftMor {
     try GraftDvCommit.seal(path, branch, byRel, appended, verb)
     catch {
       case t: Throwable if ownsAppended =>
-        val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+        val fs = GraftHadoop.fs(path)
         appended.foreach(e =>
           try fs.delete(new Path(root, e.rel), false)
           catch { case _: Throwable => () })
@@ -118,12 +117,13 @@ object GraftMor {
     val bloomCols = GraftBloom.columnsOf(path)
     val checks = GraftChecks.boundFor(spark, path, schema)
     val statsMode = GraftStats.modeOf(path)
+    val hadoopConf = GraftHadoop.ship()
     val msgs: Array[WriterCommitMessage] = clustered.queryExecution.toRdd
       .mapPartitionsWithIndex { (pid, it) =>
         if (it.isEmpty) Iterator.empty
         else {
           val w = new GraftDataWriter(path, schema, pid, pid.toLong,
-            bloomCols, checks, declared, statsMode)
+            hadoopConf.value, bloomCols, checks, declared, statsMode)
           try {
             it.foreach(w.write)
             Iterator.single(w.commit())

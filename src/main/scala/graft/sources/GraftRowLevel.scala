@@ -309,7 +309,8 @@ final case class GraftDeltaUpdateMessage(dv: Seq[(String, Array[Long])],
 final case class GraftDeltaUpdateWriterFactory(path: String,
     schema: StructType, fileIdx: Int, posIdx: Int,
     bloomCols: Seq[String], checks: Seq[GraftChecks.Check],
-    declaredBuckets: Option[Set[String]], statsMode: GraftStats.Mode)
+    declaredBuckets: Option[Set[String]], statsMode: GraftStats.Mode,
+    hadoopConf: GraftHadoop.Shipped)
     extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[org.apache.spark.sql.catalyst.InternalRow] =
@@ -321,7 +322,7 @@ final case class GraftDeltaUpdateWriterFactory(path: String,
       // until the seal), through the same routed writer every graft batch
       // write uses — checks, blooms, sums, and zone-map capture included
       private val data = new GraftDataWriter(path, schema, partitionId,
-        taskId, bloomCols, checks, declaredBuckets, statsMode)
+        taskId, hadoopConf.value, bloomCols, checks, declaredBuckets, statsMode)
 
       override def delete(meta: org.apache.spark.sql.catalyst.InternalRow,
           id: org.apache.spark.sql.catalyst.InternalRow): Unit =
@@ -392,7 +393,8 @@ class GraftDeltaUpdateWrite(path: String, schema: StructType,
     GraftDeltaUpdateWriterFactory(path, schema, fileIdx, posIdx,
       GraftBloom.columnsOf(path),
       GraftChecks.boundFor(org.apache.spark.sql.SparkSession.active, path, schema),
-      GraftStage.declaredBuckets(path), GraftStats.modeOf(path))
+      GraftStage.declaredBuckets(path), GraftStats.modeOf(path),
+      GraftHadoop.ship())
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val root = new Path(path)
@@ -409,8 +411,7 @@ class GraftDeltaUpdateWrite(path: String, schema: StructType,
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     // the new-image files were written in place but never manifested —
     // invisible; delete eagerly rather than leaving them to the sweep
-    val fs = FileSystem.get(
-      new java.net.URI(path), new org.apache.hadoop.conf.Configuration())
+    val fs = GraftHadoop.fs(path)
     messages.foreach {
       case m: GraftDeltaUpdateMessage =>
         m.add.files.foreach(f => fs.delete(new Path(f), false))
@@ -445,8 +446,7 @@ private[sources] object GraftDvCommit {
       byRel: Map[String, Array[Long]],
       appended: Seq[GraftVersions.ManifestEntry],
       verb: String): Unit = {
-    val fs = FileSystem.get(
-      new java.net.URI(path), new org.apache.hadoop.conf.Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     // declared stats mode for cutover rewrites, resolved once driver-side
     val statsWanted = GraftStats.wantedOf(GraftStats.mode(fs, root))

@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 
 /** Commit-time ZONE MAPS: per-file min/max bounds for integral data
@@ -101,7 +99,7 @@ object GraftStats {
     * the writer factories resolve once per write and serialize the answer
     * to tasks, so executor-side capture never reads the sidecar). */
   def modeOf(path: String): Mode = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     mode(fs, new Path(path))
   }
 
@@ -165,7 +163,7 @@ object GraftStats {
       : (Map[String, (Long, Long)], Map[String, (String, String)], Long) =
     try {
       if (countOpen) footerOpens.incrementAndGet()
-      val pfr = ParquetFileReader.open(HadoopInputFile.fromPath(file, conf))
+      val pfr = GraftHadoop.openFooter(file, conf)
       try {
         val rowCount = pfr.getRecordCount
         val schema = pfr.getFooter.getFileMetaData.getSchema
@@ -261,7 +259,7 @@ object GraftStats {
           case ColsMode(cols) => Some(cols.toSet)
           case _ => None
         }
-        val conf = new Configuration()
+        val conf = fs.getConf
         import scala.collection.parallel.CollectionConverters._
         added.par.map { e =>
           if (e.stats.nonEmpty || e.sstats.nonEmpty || e.rows >= 0L ||

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
@@ -145,7 +144,7 @@ class GraftMicroBatchStream(path: String, required: StructType,
 
   private val root = new Path(path)
   private def fileSystem: FileSystem =
-    FileSystem.get(new java.net.URI(path), new Configuration())
+    GraftHadoop.fs(path)
 
   private def listFiles(): Seq[(Path, Map[String, Long])] = {
     val fs = fileSystem
@@ -288,7 +287,8 @@ class GraftMicroBatchStream(path: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(required, aliases = GraftDataSource.renamesOf(path))
+    new GraftReaderFactory(required, GraftHadoop.ship(),
+      aliases = GraftDataSource.renamesOf(path))
 
   override def deserializeOffset(json: String): Offset = {
     val t = json.dropWhile(_.isWhitespace)

@@ -70,7 +70,7 @@ class GraftWriteBuilder(path: String, info: LogicalWriteInfo,
     // later ones (any path) bloom the same columns. See GraftBloom.
     Option(info.options().get(GraftBloom.OptionKey)).foreach { o =>
       GraftBloom.register(
-        FileSystem.get(new java.net.URI(path), new Configuration()),
+        GraftHadoop.fs(path),
         new Path(path),
         o.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     }
@@ -226,7 +226,7 @@ class GraftUpsertWrite(path: String, schema: StructType,
       bucketSourcePath = path)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     try {
       val spark = org.apache.spark.sql.SparkSession.active
       val dims = graft.plans.DimPruningRegistry.lookup(path).getOrElse(
@@ -274,7 +274,7 @@ class GraftUpsertWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     fs.delete(new Path(stagePath), true)
     if (inPlace) messages.foreach {
       // in-place task output of the failed write: unmanifested
@@ -351,7 +351,7 @@ class GraftOverwriteWrite(path: String, schema: StructType,
       bucketSourcePath = path)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val stageRoot = new Path(stagePath)
     val isTruncate = filters.exists(_.forall(
@@ -408,7 +408,7 @@ class GraftOverwriteWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     if (inPlace) messages.foreach {
       case m: GraftCommitMessage =>
         m.files.foreach(f => fs.delete(new Path(f), false))
@@ -457,7 +457,7 @@ class GraftReplaceGroupsWrite(path: String, schema: StructType,
       bucketSourcePath = path)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val stageRoot = new Path(stagePath)
     // removed = exactly the files the rewrite's scans planned (their rows
@@ -496,7 +496,7 @@ class GraftReplaceGroupsWrite(path: String, schema: StructType,
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     if (inPlace) messages.foreach {
       case m: GraftCommitMessage =>
         m.files.foreach(f => fs.delete(new Path(f), false))
@@ -594,7 +594,7 @@ private[sources] object GraftStage {
     * Unversioned worlds and barrier windows (physical-walk readers would
     * see the write's torn state) keep the staged swap. */
   def manifestAuthoritative(path: String): Boolean = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val st = GraftVersions.logState(fs, new Path(path))
     st.versions.nonEmpty && !st.barrier
   }
@@ -782,7 +782,7 @@ class GraftStreamingWrite(path: String, schema: StructType,
     new GraftStreamingWriterFactory(path, schema, upsert = mode == Upsert)
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val stageRoot = new Path(stageFor(epochId))
     // the regime is re-derived per FILE from the message paths (the
@@ -927,7 +927,7 @@ class GraftStreamingWrite(path: String, schema: StructType,
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     fs.delete(new Path(stageFor(epochId)), true)
     // in-place task output of the failed epoch: unmanifested (invisible),
     // deleted eagerly rather than left to the orphan sweep
@@ -964,7 +964,7 @@ object GraftStreamingWrite {
   private[sources] def compactTouchedCells(path: String, schema: StructType,
       touched: Set[Map[String, Long]], bound: Int): Int = {
     if (touched.isEmpty) return 0
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val victims = GraftDataSource.liveCells(fs, root, Array.empty)
       .filter { case (_, b, files) => touched.contains(b) && files.sizeIs > bound }
@@ -991,7 +991,7 @@ object GraftStreamingWrite {
       case e: Throwable =>
         // compaction is maintenance, never correctness: the epoch already
         // committed; leave fragmentation for the next trigger
-        FileSystem.get(new java.net.URI(ow.stagePath), new Configuration())
+        GraftHadoop.fs(ow.stagePath)
           .delete(new Path(ow.stagePath), true)
         org.slf4j.LoggerFactory.getLogger(getClass)
           .warn(s"graft stream auto-compact of $path failed: ${e.getMessage}")
@@ -1033,11 +1033,13 @@ class GraftStreamingWriterFactory(path: String, schema: StructType,
   private val declaredBuckets: Option[Set[String]] =
     GraftStage.declaredBuckets(path)
   private val statsMode: GraftStats.Mode = GraftStats.modeOf(path)
+  private val hadoopConf = GraftHadoop.ship()
   override def createWriter(partitionId: Int, taskId: Long,
       epochId: Long): DataWriter[InternalRow] =
     new GraftDataWriter(
       if (inPlace) path else s"${path}__graft_epoch_$epochId", schema,
-      partitionId, taskId, bloomCols, checks, declaredBuckets, statsMode)
+      partitionId, taskId, hadoopConf.value, bloomCols, checks,
+      declaredBuckets, statsMode)
 }
 
 class GraftBatchWrite(path: String, schema: StructType,
@@ -1055,7 +1057,7 @@ class GraftBatchWrite(path: String, schema: StructType,
     // straight into the grid, so THIS commit's files must not leak into a
     // first-commit baseline manifest; the seal is incremental (predecessor
     // + this commit's files) — an append never pays a grid walk.
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     val root = new Path(path)
     val added = GraftStage.messageEntries(root, messages)
     val c = branch match {
@@ -1074,7 +1076,7 @@ class GraftBatchWrite(path: String, schema: StructType,
     }
   }
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     messages.foreach {
       case m: GraftCommitMessage =>
         m.files.foreach(f => fs.delete(new Path(f), false))
@@ -1113,9 +1115,10 @@ class GraftWriterFactory(path: String, schema: StructType,
   // bounds inline, never reading the sidecar nor any footer
   private val statsMode: GraftStats.Mode =
     GraftStats.modeOf(Option(bucketSourcePath).getOrElse(path))
+  private val hadoopConf = GraftHadoop.ship()
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftDataWriter(path, schema, partitionId, taskId, bloomCols, checks,
-      declaredBuckets, statsMode)
+    new GraftDataWriter(path, schema, partitionId, taskId, hadoopConf.value,
+      bloomCols, checks, declaredBuckets, statsMode)
 }
 
 /** Per-file EXACT integral-column sums, carried into the parquet footer as
@@ -1174,7 +1177,11 @@ private[sources] final class GraftParquetWriterBuilder(file: Path,
 /** Routes rows to per-chunk parquet writers, opened lazily per bucket tuple
   * encountered in this task's partition. */
 class GraftDataWriter(path: String, schema: StructType, partitionId: Int,
-    taskId: Long, bloomCols: Seq[String] = Nil,
+    taskId: Long,
+    // the session conf shipped with the factory; cloned per file before the
+    // per-file schema is set on it
+    conf: Configuration,
+    bloomCols: Seq[String] = Nil,
     checks: Seq[GraftChecks.Check] = Nil,
     declaredBuckets: Option[Set[String]] = None,
     statsMode: GraftStats.Mode = GraftStats.AutoMode) extends DataWriter[InternalRow] {
@@ -1193,7 +1200,6 @@ class GraftDataWriter(path: String, schema: StructType, partitionId: Int,
     (c, p)
   }
 
-  private val conf = new Configuration()
   private val bucketIdx: Array[Int] = schema.fields.zipWithIndex
     .collect { case (f, i) if isBucketCol(f.name) => i }
   // _cell rides the row-level rewrite schema for routing context only
@@ -1398,7 +1404,7 @@ class GraftDataWriter(path: String, schema: StructType, partitionId: Int,
     current = None
     // per-file lengths for the manifest seal: executor-side stats, a few
     // files per task, parallel across the job
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = FileSystem.get(new java.net.URI(path), conf)
     GraftCommitMessage(files.toSeq, rowsWritten,
       files.toSeq.map(f => fs.getFileStatus(new Path(f)).getLen),
       if (statsOn) statsTrackers.toSeq.map(_.result) else Nil)
@@ -1407,7 +1413,7 @@ class GraftDataWriter(path: String, schema: StructType, partitionId: Int,
   override def abort(): Unit = {
     current.foreach(c => try c._2.close() catch { case _: Throwable => () })
     current = None
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = FileSystem.get(new java.net.URI(path), conf)
     files.foreach(f => fs.delete(new Path(f), false))
   }
 

@@ -1,6 +1,5 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFunction, UnboundFunction}
@@ -45,7 +44,7 @@ object GraftZOrder {
   /** Z-order columns of a table path; empty when the sidecar is absent.
     * One driver-side read per WRITE plan, never per task. */
   def columnsOf(path: String): Seq[String] = {
-    val fs = FileSystem.get(new java.net.URI(path), new Configuration())
+    val fs = GraftHadoop.fs(path)
     columns(fs, new Path(path))
   }
 
