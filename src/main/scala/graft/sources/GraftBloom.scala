@@ -5,8 +5,8 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter,
-  GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter,
+  GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Or}
 
 /** Per-chunk file skipping for POINT LOOKUPS and RANGE predicates on
   * registered non-bucket columns (blooms/dictionaries for equality, footer
@@ -104,14 +104,19 @@ object GraftBloom {
       cols.map(c => s"parquet.bloom.filter.enabled#$c" -> "true")
 
   /** One testable conjunct of the pushed residual: either an equality set
-    * (bloom/dictionary refutation — ANY candidate present keeps the file)
-    * or a range bound (footer min/max refutation; `op` uses the parquet
-    * leaf convention 2=lt 3=ltEq 4=gt 5=gtEq). */
-  private[sources] sealed trait SkipAtom { def col: String }
+    * (bloom/dictionary refutation — ANY candidate present keeps the file),
+    * a range bound (footer min/max refutation; `op` uses the parquet
+    * leaf convention 2=lt 3=ltEq 4=gt 5=gtEq), or a disjunction of them. */
+  private[sources] sealed trait SkipAtom { def cols: Seq[String] }
+  /** An atom over one column — what the footer/bloom tier can test. */
+  private[sources] sealed trait ColAtom extends SkipAtom {
+    def col: String
+    def cols: Seq[String] = Seq(col)
+  }
   private[sources] final case class EqAtom(col: String, values: Array[Any])
-    extends SkipAtom
+    extends ColAtom
   private[sources] final case class RangeAtom(col: String, op: Int, v: Long)
-    extends SkipAtom
+    extends ColAtom
   /** Range bound over a STRING column (UTF-8 byte order — matches both
     * parquet's BINARY(UTF8) unsigned comparator and Spark's string
     * ordering). Tested against manifest string zone maps with
@@ -119,7 +124,17 @@ object GraftBloom {
     * and against footer binary statistics (valid bounds by the parquet
     * contract even when the writer truncated them). */
   private[sources] final case class StrRangeAtom(col: String, op: Int, v: String)
-    extends SkipAtom
+    extends ColAtom
+  /** `leg1 OR leg2 OR ...`, each leg the conjunction of its atoms. A file
+    * is kept when ANY leg might match. A leg holds the atoms of the
+    * conjuncts that translated; dropping an untranslatable conjunct only
+    * widens the leg, so the refutation stays sound. Tested against zone
+    * maps only: the footer/bloom tier could only answer "maybe" for it, so
+    * it never reaches [[fileMightMatch]]. */
+  private[sources] final case class OrAtom(legs: Seq[Seq[SkipAtom]])
+    extends SkipAtom {
+    def cols: Seq[String] = legs.flatten.flatMap(_.cols).distinct
+  }
 
   private def asLong(v: Any): Option[Long] = v match {
     case l: Long  => Some(l)
@@ -145,10 +160,16 @@ object GraftBloom {
   }
 
   /** The atoms of a pushed residual conjunction that file-level skipping
-    * can test against registered columns. */
+    * can test against registered columns. A disjunction becomes an
+    * [[OrAtom]] only when every leg yields at least one atom: a leg with
+    * none could match anything, and so could the whole disjunction. */
   private[sources] def skipAtoms(residual: Array[Filter],
       cols: Set[String]): Seq[SkipAtom] =
     residual.toSeq.flatMap {
+      case And(l, r) => skipAtoms(Array(l, r), cols)
+      case Or(l, r) =>
+        val legs = Seq(l, r).map(f => skipAtoms(Array(f), cols))
+        if (legs.forall(_.nonEmpty)) Seq(OrAtom(legs)) else Nil
       case EqualTo(c, v) if cols(c) && v != null => Seq(EqAtom(c, Array[Any](v)))
       case EqualNullSafe(c, v) if cols(c) && v != null =>
         Seq(EqAtom(c, Array[Any](v)))
@@ -176,7 +197,7 @@ object GraftBloom {
     * whole files the way they already drop row groups. Missing
     * blooms/stats / unsupported types answer "maybe" (file kept). */
   def fileMightMatch(conf: Configuration, file: String,
-      atoms: Seq[SkipAtom]): Boolean = {
+      atoms: Seq[ColAtom]): Boolean = {
     val pfr = GraftHadoop.openFooter(new Path(file), conf)
     try {
       val schema = pfr.getFooter.getFileMetaData.getSchema

@@ -10,7 +10,6 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
@@ -91,20 +90,23 @@ object GraftColumnar {
     }
 }
 
-class GraftColumnarPartitionReader(p: GraftInputPartition,
+class GraftColumnarPartitionReader(p: GraftFileSpec,
+    // rows this file may still serve (−1 = no pushed limit)
+    limit: Long,
     required: StructType,
     // the scan's shipped session conf, shared across tasks: read-only here
     shared: Configuration,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
-    extends PartitionReader[ColumnarBatch] {
+    extends GraftFileReader[ColumnarBatch] {
 
   private var reader: VectorizedParquetRecordReader = _
   private var out: ColumnarBatch = _
   // required-order view through the dv survivor mapping (dv'd files only)
   private var mappedOut: ColumnarBatch = _
   private var current: ColumnarBatch = _
-  private var emittedRows = 0L
+  private var emitted = 0L
+  override def emittedRows: Long = emitted
   // merge-on-read deletion vector: sorted physical ordinals to skip, with a
   // monotone cursor (batches arrive in ordinal order — no filters are
   // pushed when a dv is present, so row groups are never skipped)
@@ -261,16 +263,16 @@ class GraftColumnarPartitionReader(p: GraftInputPartition,
   }
 
   override def next(): Boolean = {
-    if (p.limit >= 0 && emittedRows >= p.limit) return false
+    if (limit >= 0 && emitted >= limit) return false
     if (constOnlyRemaining >= 0L) {
       if (constOnlyRemaining <= 0L) return false
       var n = math.min(constOnlyRemaining,
         GraftColumnarPartitionReader.Capacity.toLong).toInt
-      if (p.limit >= 0 && emittedRows + n > p.limit)
-        n = (p.limit - emittedRows).toInt
+      if (limit >= 0 && emitted + n > limit)
+        n = (limit - emitted).toInt
       constOnlyRemaining -= n
       out.setNumRows(n)
-      emittedRows += n
+      emitted += n
       return n > 0
     }
     // dv application: batches stream in physical-ordinal order; a batch
@@ -300,14 +302,14 @@ class GraftColumnarPartitionReader(p: GraftInputPartition,
       }
     }
     if (live == 0) return false
-    // pushed per-partition limit counts LIVE rows (like the row reader);
-    // truncate the final batch (mapping/vectors are positional from row 0,
-    // so keeping the first k rows is exact)
-    if (p.limit >= 0 && emittedRows + live > p.limit)
-      live = (p.limit - emittedRows).toInt
+    // pushed limit counts LIVE rows (like the row reader); truncate the
+    // final batch (mapping/vectors are positional from row 0, so keeping
+    // the first k rows is exact)
+    if (limit >= 0 && emitted + live > limit)
+      live = (limit - emitted).toInt
     current = if (mapped) mappedOut else out
     current.setNumRows(live)
-    emittedRows += live
+    emitted += live
     live > 0
   }
 

@@ -1007,8 +1007,9 @@ class GraftScanBuilder(path: String, schema: StructType,
       maxBytesPerTrigger)
 }
 
-/** The pushed-aggregate scan: partitions are chunk files, rows are
-  * (group bucket values..., one partial value per pushed aggregate).
+/** The pushed-aggregate scan: partitions are splits of chunk files, rows
+  * are one per file: (group bucket values..., one partial value per pushed
+  * aggregate).
   * Batch-only (the streaming path never sees it — aggregate pushdown is a
   * batch-plan rewrite). Group columns come FIRST in the row, matching
   * V2ScanRelationPushDown's positional zip of grouping expressions with the
@@ -1016,7 +1017,8 @@ class GraftScanBuilder(path: String, schema: StructType,
 class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
     aggs: Seq[PushedAgg], groupCols: Array[String] = Array.empty,
     pin: Option[GraftTimePin] = None)
-    extends Scan with Batch with SupportsReportPartitioning {
+    extends Scan with Batch with SupportsReportPartitioning
+    with GraftNumFilesMetric.Reporting {
   private def colType(c: String): DataType =
     if (GraftDataSource.isBucket(c)) LongType
     else tableSchema.fields.find(_.name == c).map(_.dataType).getOrElse(LongType)
@@ -1024,17 +1026,18 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
   /** The partial-aggregate rows are keyed by the group columns (leading
     * output columns), and rows of one chunk file agree on all of them — so
     * the scan reports the same key-grouped partitioning the row scan does.
-    * Under the v2-bucketing conf this removes the exchange above a
-    * bucket-grouped aggregation (Spark's final agg runs in place over the
-    * key-grouped footer rows), and a JOIN of two worlds' per-cell summaries
-    * plans with zero exchanges end-to-end — both sides of the join are
-    * metadata reads. */
+    * With `spark.sql.sources.v2.bucketing.enabled` (true by default in
+    * Spark 4.1) this removes the exchange above a bucket-grouped
+    * aggregation (Spark's final agg runs in place over the key-grouped
+    * footer rows), and a JOIN of two worlds' per-cell summaries plans with
+    * zero exchanges end-to-end — both sides of the join are metadata
+    * reads. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read
       .partitioning.Partitioning =
     if (groupCols.isEmpty)
       new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
     else {
-      val n = files.map { case (_, b, _, _) => groupCols.toSeq.map(b(_)) }
+      val n = files.map { case (_, b, _, _, _) => groupCols.toSeq.map(b(_)) }
         .distinct.size
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
         groupCols.map(k => org.apache.spark.sql.connector.expressions.Expressions
@@ -1042,19 +1045,19 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
         math.max(n, 1))
     }
 
-  // one file per entry with its bucket binding + manifest row/dv counts:
-  // the live-cell resolution (latest manifest when authoritative, pruned
-  // walk otherwise), or the version pin's manifest-resolved files (footer
-  // metadata reads work identically on retired-in-place files)
-  @transient private lazy val files: Seq[(Path, Map[String, Long], Long, Long)] = {
+  // one file per entry with its bucket binding, size + manifest row/dv
+  // counts: the live-cell resolution (latest manifest when authoritative,
+  // pruned walk otherwise), or the version pin's manifest-resolved files
+  // (footer metadata reads work identically on retired-in-place files)
+  @transient private lazy val files: Seq[(Path, Map[String, Long], Long, Long, Long)] = {
     val fs = GraftHadoop.fs(path)
     pin match {
       case Some(p) => p.files(fs, new Path(path), pushed)
-        .map { case (f, b, e) => (f, b, e.rows, e.dv.map(_._2).getOrElse(0L)) }
+        .map { case (f, b, e) => (f, b, e.size, e.rows, e.dv.map(_._2).getOrElse(0L)) }
       case None =>
         GraftDataSource.liveCells(fs, new Path(path), pushed)
           .flatMap { case (_, b, fls) => fls.map(fr =>
-            (fr.path, b, fr.rows, fr.dv.map(_._2).getOrElse(0L))) }
+            (fr.path, b, fr.size, fr.rows, fr.dv.map(_._2).getOrElse(0L))) }
     }
   }
 
@@ -1078,11 +1081,21 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
       s"PushedAggregation: [${aggs.map(_.name).mkString(", ")}]" +
       (if (groupCols.isEmpty) "" else s", PushedGroupBy: [${groupCols.mkString(", ")}]")
 
-  override def planInputPartitions(): Array[InputPartition] =
-    files.map { case (f, b, rows, dvCount) =>
-      GraftAggPartition(f.toString, groupCols.map(b(_)), b,
-        rows, dvCount): InputPartition
-    }.toArray
+  /** A grouped scan plans one file per partition (key-grouped, like the
+    * row scan); an ungrouped one packs its files into splits
+    * ([[GraftSplits]]) — a manifest-answered COUNT(*) then costs a few
+    * tasks, not one per file. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val specs = files.map { case (f, b, size, rows, dvCount) =>
+      (GraftAggFile(f.toString, groupCols.map(b(_)), b, rows, dvCount), size)
+    }
+    plannedFiles = specs.size
+    val splits =
+      if (groupCols.nonEmpty) specs.map(Seq(_))
+      else GraftSplits.pack(specs)(_._2)
+    splits.map(split => GraftAggPartition(split.map(_._1).toArray): InputPartition)
+      .toArray
+  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftAggReaderFactory(aggs, StructType(tableSchema.fields
@@ -1090,15 +1103,20 @@ class GraftAggScan(path: String, tableSchema: StructType, pushed: Array[Filter],
       GraftHadoop.ship(), GraftDataSource.renamesOf(path))
 }
 
-final case class GraftAggPartition(file: String, groupVals: Array[Long],
+/** One chunk file of a pushed-aggregate split. */
+final case class GraftAggFile(file: String, groupVals: Array[Long],
     buckets: Map[String, Long],
     // manifest-carried physical row count (−1 = unknown) and deletion-
     // vector cardinality: row-count-derivable aggregates answer from these
     // with no footer open at all
     rows: Long = -1L, dvCount: Long = 0L)
+
+/** The files one pushed-aggregate task answers, one partial row each. A
+  * grouped scan plans one file per split, so the key is that file's. */
+final case class GraftAggPartition(files: Array[GraftAggFile])
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
-    new GenericInternalRow(groupVals.map(v => v: Any))
+    new GenericInternalRow(files.head.groupVals.map(v => v: Any))
 }
 
 /** Computes each pushed aggregate's per-file partial from the footer:
@@ -1115,8 +1133,10 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
-      private val p = partition.asInstanceOf[GraftAggPartition]
-      private var emitted = false
+      private val files = partition.asInstanceOf[GraftAggPartition].files
+      private var nextFile = 0
+      // the file whose partial row is current
+      private var p: GraftAggFile = _
       private var vals: Array[Any] = _
 
       private def compute(): Array[Any] = {
@@ -1322,28 +1342,33 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
       }
 
       override def next(): Boolean =
-        if (emitted) false
-        else { vals = compute(); emitted = true; true }
+        if (nextFile >= files.length) false
+        else { p = files(nextFile); nextFile += 1; vals = compute(); true }
       override def get(): InternalRow =
         new GenericInternalRow(p.groupVals.map(v => v: Any) ++ vals)
       override def close(): Unit = ()
     }
 }
 
-/** `keyVals` are this chunk's bucket values projected to the scan's reported
-  * partitioning keys (canonical c0..cN order) — the `partitionKey` contract
-  * that lets Spark group chunk files into key-aligned partitions for
-  * storage-partitioned joins. Empty when the scan reports no partitioning
-  * (bucket columns pruned from the output). */
-final case class GraftInputPartition(file: String, buckets: Map[String, Long],
-    rowCountOnly: Boolean, limit: Int = -1, keyVals: Array[Long] = Array.empty,
-    // CDC streams only: "insert"/"delete", surfaced as the _change_type
-    // per-partition constant (null = not a change-feed read)
-    changeTag: String = null,
+/** One chunk file of a planned split, with its cell's bucket values. */
+final case class GraftFileSpec(file: String, buckets: Map[String, Long],
     // merge-on-read deletion vector of this file: absolute sidecar path +
     // deleted-row count (null = no deletes); the reader skips exactly
     // these physical ordinals
     dvPath: String = null, dvCount: Long = 0L,
+    // CDC streams only: "insert"/"delete", surfaced as the _change_type
+    // per-file constant (null = not a change-feed read)
+    changeTag: String = null)
+
+/** One split: the chunk files one task reads, in order.
+  * `keyVals` are the files' bucket values projected to the scan's reported
+  * partitioning keys (canonical c0..cN order) — the `partitionKey` contract
+  * that lets Spark group chunk files into key-aligned partitions for
+  * storage-partitioned joins. Empty when the scan reports no partitioning
+  * (bucket columns pruned from the output); a keyed split holds one file.
+  * A pushed `limit` bounds the rows of the whole split. */
+final case class GraftInputPartition(files: Array[GraftFileSpec],
+    rowCountOnly: Boolean, limit: Int = -1, keyVals: Array[Long] = Array.empty,
     // vectorized read (r17): decided SCAN-UNIFORMLY by planInputPartitions
     // (Spark forbids mixing row and columnar partitions in one scan) —
     // true when the required schema is vector-servable
@@ -1357,6 +1382,42 @@ final case class GraftInputPartition(file: String, buckets: Map[String, Long],
     new GenericInternalRow(keyVals.map(v => v: Any))
 }
 
+/** Packs chunk files into splits the way Spark's own file scan does
+  * (`FilePartition.maxSplitBytes` / `getFilePartitions`): a split holds up
+  * to `min(maxPartitionBytes, max(openCostInBytes, Σ(size + openCost) /
+  * minPartitionNum))` bytes, each file costing its size plus the open
+  * cost; files are taken largest first and a split closes when the next
+  * file would overflow it. The inputs are the session's
+  * `spark.sql.files.maxPartitionBytes`, `spark.sql.files.openCostInBytes`
+  * and `spark.sql.files.minPartitionNum` (default: the leaf-node default
+  * parallelism). Chunk files are never cut. Inside a split, files keep
+  * their input order. */
+object GraftSplits {
+  def pack[T](items: Seq[T])(size: T => Long): Seq[Seq[T]] = {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val openCost = conf.filesOpenCostInBytes
+    val minPartitions = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
+    // a pre-size-format manifest entry (size −1) costs the open cost alone
+    def len(t: T): Long = math.max(size(t), 0L)
+    val total = items.map(len(_) + openCost).sum
+    val maxSplit = math.min(conf.filesMaxPartitionBytes,
+      math.max(openCost, total / minPartitions))
+    val splits = Seq.newBuilder[Seq[(T, Int)]]
+    val cur = scala.collection.mutable.ArrayBuffer.empty[(T, Int)]
+    var curSize = 0L
+    items.zipWithIndex.sortBy { case (t, _) => -len(t) }.foreach { case (t, i) =>
+      if (cur.nonEmpty && curSize + len(t) > maxSplit) {
+        splits += cur.toSeq; cur.clear(); curSize = 0L
+      }
+      cur += ((t, i)); curSize += len(t) + openCost
+    }
+    if (cur.nonEmpty) splits += cur.toSeq
+    splits.result().map(_.sortBy(_._2).map(_._1))
+  }
+}
+
 class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     limit: Int = -1, topN: Array[(String, Boolean)] = Array.empty,
     residual: Array[Filter] = Array.empty,
@@ -1367,7 +1428,8 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     maxVersionsPerTrigger: Option[Long] = None,
     maxBytesPerTrigger: Option[Long] = None)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeFiltering with SupportsReportPartitioning {
+    with SupportsRuntimeFiltering with SupportsReportPartitioning
+    with GraftNumFilesMetric.Reporting {
   override def readSchema(): StructType = required
   override def toBatch: Batch = {
     if (follow) throw new UnsupportedOperationException(
@@ -1398,7 +1460,7 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
   // join over a non-dim key (e.g. doc_id) skips the files that provably
   // hold none of the keys, without any bucket alignment. Capped per atom:
   // probing a bloom per (file x key) is only worth it for selective builds.
-  private var runtimeBloom: Seq[GraftBloom.SkipAtom] = Nil
+  private var runtimeBloom: Seq[GraftBloom.ColAtom] = Nil
   private val RuntimeKeyCap = 1024
 
   @transient private lazy val skipCols: Set[String] = {
@@ -1435,9 +1497,10 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     runtime = filters.filter(GraftDataSource.bucketOnly)
     runtimeBloom = GraftBloom.skipAtoms(
         filters.filterNot(GraftDataSource.bucketOnly), skipCols)
-      .filter {
-        case GraftBloom.EqAtom(_, vs) => vs.length <= RuntimeKeyCap
-        case _ => true
+      .collect {
+        case a @ GraftBloom.EqAtom(_, vs) if vs.length <= RuntimeKeyCap => a
+        case a: GraftBloom.RangeAtom => a
+        case a: GraftBloom.StrRangeAtom => a
       }
     cachedCells = null // pruning changed: re-list on next planning call
   }
@@ -1474,9 +1537,10 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     * restatement of the reference's aligned chunk iteration (two `Select`s
     * over the same grid visit cells in lockstep, /root/reference/src/world/
     * iter.rs). At 100 TB this is the difference between a full-table shuffle
-    * of both sides and a join that never leaves the chunk files. Reported
-    * unconditionally (it is metadata); plan behavior changes only under the
-    * opt-in conf. */
+    * of both sides and a join that never leaves the chunk files. Spark acts
+    * on it whenever `spark.sql.sources.v2.bucketing.enabled` holds, which
+    * is the default in Spark 4.1; that is why a keyed scan plans one file
+    * per partition and leaves the grouping to Spark. */
   override def outputPartitioning(): org.apache.spark.sql.connector.read
       .partitioning.Partitioning = {
     val keys = keyCols
@@ -1584,20 +1648,22 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
        else s", RowGroupFilters: [${residual.mkString(", ")}]") +
       (if (runtime.isEmpty) "" else s", RuntimeBucketFilters: [${runtime.mkString(", ")}]") +
       (if (runtimeBloom.isEmpty) ""
-       else s", RuntimeBloomSkipCols: [${runtimeBloom.map(_.col).distinct.mkString(", ")}]") +
+       else s", RuntimeBloomSkipCols: [${runtimeBloom.flatMap(_.cols).distinct.mkString(", ")}]") +
       (if (bloomAtoms.isEmpty) ""
-       else s", BloomSkipCols: [${bloomAtoms.map(_.col).distinct.mkString(", ")}]") +
+       else s", BloomSkipCols: [${bloomAtoms.flatMap(_.cols).distinct.mkString(", ")}]") +
       (if (zoneAtoms.isEmpty) ""
-       else s", ZoneSkipCols: [${zoneAtoms.map(_.col).distinct.mkString(", ")}]")
+       else s", ZoneSkipCols: [${zoneAtoms.flatMap(_.cols).distinct.mkString(", ")}]")
 
   /** Residual equality/range atoms testable against the table's registered
     * skip columns (the `_graft_bloom` sidecar) — non-empty exactly when
     * this scan is a point lookup or registered-column range scan that
-    * file-level skipping can serve. */
-  @transient private lazy val bloomAtoms: Seq[GraftBloom.SkipAtom] = {
+    * file-level skipping can serve. Disjunctions are left to the zone
+    * maps: the footer tier could only answer "maybe" for them. */
+  @transient private lazy val bloomAtoms: Seq[GraftBloom.ColAtom] = {
     val fs = GraftHadoop.fs(path)
     val cols = GraftBloom.columns(fs, new Path(path)).toSet
-    if (cols.isEmpty) Nil else GraftBloom.skipAtoms(residual, cols)
+    if (cols.isEmpty) Nil
+    else GraftBloom.skipAtoms(residual, cols).collect { case a: GraftBloom.ColAtom => a }
   }
 
   /** Residual atoms testable against MANIFEST-carried zone maps — built
@@ -1619,101 +1685,91 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     * refutations are proofs, so recording only the survivors for row-level
     * rewrites stays sound. See [[GraftBloom]]. */
   private def bloomSurvivors(
-      files: Seq[(String, Map[String, Long], Map[String, (Long, Long)],
-        Option[(String, Long)], Map[String, (String, String)])])
-      : Seq[(String, Map[String, Long], Option[(String, Long)])] = {
+      files: Seq[(GraftDataSource.FileRef, Map[String, Long])])
+      : Seq[(GraftDataSource.FileRef, Map[String, Long])] = {
     // dv'd files still prune by zone maps and blooms: both are computed
     // over the full file (deleted rows included), so refutation remains a
     // PROOF that no live row matches — only ever conservative
     val zAtoms = zoneAtoms ++ runtimeBloom
     val zoned =
       if (zAtoms.isEmpty) files
-      else files.filter { case (_, _, bounds, _, sbounds) =>
-        GraftStats.boundsMightMatch(bounds, sbounds, zAtoms, renameAliases)
+      else files.filter { case (fr, _) =>
+        GraftStats.boundsMightMatch(fr.stats, fr.sstats, zAtoms, renameAliases)
       }
     val atoms = bloomAtoms ++ runtimeBloom
-    if (atoms.isEmpty) zoned.map { case (f, b, _, dv, _) => (f, b, dv) }
+    if (atoms.isEmpty) zoned
     else {
       import scala.collection.parallel.CollectionConverters._
       val conf = GraftHadoop.conf
-      zoned.par.filter { case (f, _, _, _, _) =>
-        GraftBloom.fileMightMatch(conf, f, atoms)
-      }.seq.map { case (f, b, _, dv, _) => (f, b, dv) }
+      zoned.par.filter { case (fr, _) =>
+        GraftBloom.fileMightMatch(conf, fr.path.toString, atoms)
+      }.seq
     }
   }
 
+  /** Chunk files the pushed bucket filters and the top-N walk leave for
+    * file-level skipping, each with its cell's bucket values. Pinned scans
+    * take the version manifest's files (limit/top-N pushdowns and runtime
+    * filters are declined in pinned mode). */
+  private def candidates(): Seq[(GraftDataSource.FileRef, Map[String, Long])] =
+    if (pin.isDefined) pinnedWalk.map { case (f, b, e) =>
+      (GraftDataSource.FileRef(f, e.size, e.stats,
+        GraftDv.absOf(f.toString, e).map((_, e.dv.get._2)), e.sstats, e.rows), b)
+    }
+    else {
+      val cells =
+        if (topN.isEmpty || limit < 0) liveCellList()
+        else {
+          // pushed top-N: visit chunk cells in sort-key order, stop once the
+          // kept cells' footer row counts cover the limit — at most
+          // ceil(limit / rows-per-chunk) + 1 cells survive, and only their
+          // footers are ever opened (metadata reads bounded by the kept
+          // prefix, not the grid)
+          val ord = new Ordering[Map[String, Long]] {
+            def compare(a: Map[String, Long], b: Map[String, Long]): Int = {
+              var i = 0
+              while (i < topN.length) {
+                val (c, asc) = topN(i)
+                val cmp = java.lang.Long.compare(a(c), b(c))
+                if (cmp != 0) return if (asc) cmp else -cmp
+                i += 1
+              }
+              0
+            }
+          }
+          val sorted = liveCellList().sortBy(_._2)(ord)
+          var cum = 0L
+          sorted.takeWhile { case (_, _, files) =>
+            val keep = cum < limit
+            // LIVE row cover: manifest-carried counts (minus the deletion
+            // vector's cardinality) answer with ZERO footer opens; only
+            // pre-rows-format entries fall back to one footer read each.
+            // Footer counts include dv-deleted rows, so the vector is
+            // subtracted either way — over-counting would stop the kept
+            // prefix before it actually covers the limit.
+            if (keep) cum += files.map { fr =>
+              if (fr.liveRows >= 0L) fr.liveRows
+              else {
+                val pfr = GraftHadoop.openFooter(fr.path, GraftHadoop.conf)
+                (try pfr.getRecordCount finally pfr.close()) -
+                  fr.dv.map(_._2).getOrElse(0L)
+              }
+            }.sum
+            keep
+          }
+        }
+      cells.flatMap { case (_, b, files) => files.map((_, b)) }
+    }
+
+  /** One partition per split of surviving chunk files. A key-grouped scan
+    * plans one file per partition and Spark groups them by key; any other
+    * scan packs its files into parallelism-sized splits ([[GraftSplits]]).
+    * (A pushed top-N always projects its bucket sort columns, so it is
+    * key-grouped and its per-file limit stays per file.) */
   override def planInputPartitions(): Array[InputPartition] = {
     val hasDataCols = required.exists(f => !GraftDataSource.isBucket(f.name))
     val keys = keyCols
-    if (pin.isDefined) {
-      // manifest-driven: one partition per pinned file (limit/topN
-      // pushdowns and runtime filters are declined in pinned mode). A
-      // BRANCH pin can back a row-level rewrite (WAP DML): the recorder
-      // notes exactly the planned branch-head survivors — all of whose
-      // rows the rewrite re-emits — for retirement from the branch chain.
-      val survivors = bloomSurvivors(pinnedWalk.map { case (f, b, e) =>
-        (f.toString, b, e.stats, GraftDv.absOf(f.toString, e).map(
-          (_, e.dv.get._2)), e.sstats)
-      })
-      fileRecorder.foreach { r => r.clear(); survivors.foreach(x => r.add(x._1)) }
-      val columnarOk = hasDataCols && GraftColumnar.enabled &&
-        GraftColumnar.supportedSchema(required)
-      return survivors
-        .map { case (f, b, dv) =>
-          // getOrElse: a pre-regrid file lacks buckets a later geometry
-          // added; -1 groups those files consistently (join conditions
-          // are still row-checked — grouping is only co-location)
-          GraftInputPartition(f, b, !hasDataCols, -1,
-            keys.map(b.getOrElse(_, -1L)),
-            dvPath = dv.map(_._1).orNull,
-            dvCount = dv.map(_._2).getOrElse(0L),
-            columnar = columnarOk): InputPartition
-        }.toArray
-    }
-    val planned: Seq[(Path, Map[String, Long], Seq[GraftDataSource.FileRef])] =
-      if (topN.isEmpty || limit < 0) liveCellList()
-      else {
-        // pushed top-N: visit chunk cells in sort-key order, stop once the
-        // kept cells' footer row counts cover the limit — at most
-        // ceil(limit / rows-per-chunk) + 1 cells survive, and only their
-        // footers are ever opened (metadata reads bounded by the kept
-        // prefix, not the grid)
-        val ord = new Ordering[Map[String, Long]] {
-          def compare(a: Map[String, Long], b: Map[String, Long]): Int = {
-            var i = 0
-            while (i < topN.length) {
-              val (c, asc) = topN(i)
-              val cmp = java.lang.Long.compare(a(c), b(c))
-              if (cmp != 0) return if (asc) cmp else -cmp
-              i += 1
-            }
-            0
-          }
-        }
-        val sorted = liveCellList().sortBy(_._2)(ord)
-        var cum = 0L
-        sorted.takeWhile { case (_, _, files) =>
-          val keep = cum < limit
-          // LIVE row cover: manifest-carried counts (minus the deletion
-          // vector's cardinality) answer with ZERO footer opens; only
-          // pre-rows-format entries fall back to one footer read each.
-          // Footer counts include dv-deleted rows, so the vector is
-          // subtracted either way — over-counting would stop the kept
-          // prefix before it actually covers the limit.
-          if (keep) cum += files.map { fr =>
-            if (fr.liveRows >= 0L) fr.liveRows
-            else {
-              val pfr = GraftHadoop.openFooter(fr.path, GraftHadoop.conf)
-              (try pfr.getRecordCount finally pfr.close()) -
-                fr.dv.map(_._2).getOrElse(0L)
-            }
-          }.sum
-          keep
-        }
-      }
-    val survivors = bloomSurvivors(planned.flatMap { case (_, b, files) =>
-      files.map(fr => (fr.path.toString, b, fr.stats, fr.dv, fr.sstats))
-    })
+    val survivors = bloomSurvivors(candidates())
     // row-level rewrites note every SURVIVING planned file (post bucket +
     // runtime pruning AND post bloom skip — exactly the rows the rewrite
     // will re-emit; the commit retires these rels from the manifest).
@@ -1727,18 +1783,29 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     // BatchScanExec plans once before runtime filters arrive and again
     // after — the recorder must reflect only THIS scan's latest plan
     // (each scan instance owns its set; the operation unions sets at
-    // commit).
+    // commit). A BRANCH pin can back a row-level rewrite (WAP DML): its
+    // recorder notes the planned branch-head survivors by full path.
     fileRecorder.foreach { r =>
       r.clear()
-      survivors.foreach { case (f, _, _) => r.add(new Path(f).toUri.getPath) }
+      survivors.foreach { case (fr, _) =>
+        r.add(if (pin.isDefined) fr.path.toString else fr.path.toUri.getPath) }
     }
+    plannedFiles = survivors.size
     val columnarOk = hasDataCols && GraftColumnar.enabled &&
       GraftColumnar.supportedSchema(required)
-    survivors.map { case (p, b, dv) =>
-      GraftInputPartition(p, b, !hasDataCols, limit,
-        keys.map(b(_)),
-        dvPath = dv.map(_._1).orNull,
-        dvCount = dv.map(_._2).getOrElse(0L),
+    val splits =
+      if (keys.nonEmpty) survivors.map(Seq(_))
+      else GraftSplits.pack(survivors)(_._1.size)
+    splits.map { split =>
+      GraftInputPartition(split.map { case (fr, b) =>
+          GraftFileSpec(fr.path.toString, b,
+            dvPath = fr.dv.map(_._1).orNull,
+            dvCount = fr.dv.map(_._2).getOrElse(0L))
+        }.toArray, !hasDataCols, limit,
+        // getOrElse: a pre-regrid file lacks buckets a later geometry
+        // added; -1 groups those files consistently (join conditions are
+        // still row-checked — grouping is only co-location)
+        keys.map(k => split.head._2.getOrElse(k, -1L)),
         columnar = columnarOk): InputPartition
     }.toArray
   }
@@ -1752,9 +1819,12 @@ class GraftReaderFactory(required: StructType,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], required,
-      hadoopConf.value, residual, aliases)
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    val p = partition.asInstanceOf[GraftInputPartition]
+    new GraftSplitReader[InternalRow](p, (f, limit) =>
+      new GraftPartitionReader(f, p.rowCountOnly, limit, required,
+        hadoopConf.value, residual, aliases))
+  }
 
   // r17 vectorized path: the flag is stamped scan-uniformly at planning
   // (see GraftInputPartition.columnar), so a scan is all-columnar or
@@ -1762,10 +1832,77 @@ class GraftReaderFactory(required: StructType,
   override def supportColumnarReads(partition: InputPartition): Boolean =
     partition.asInstanceOf[GraftInputPartition].columnar
   override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new GraftColumnarPartitionReader(
-      partition.asInstanceOf[GraftInputPartition], required, hadoopConf.value,
-      residual, aliases)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val p = partition.asInstanceOf[GraftInputPartition]
+    new GraftSplitReader[org.apache.spark.sql.vectorized.ColumnarBatch](p,
+      (f, limit) => new GraftColumnarPartitionReader(f, limit, required,
+        hadoopConf.value, residual, aliases))
+  }
+}
+
+/** A reader of one chunk file that counts the rows it served. */
+private[sources] trait GraftFileReader[T] extends PartitionReader[T] {
+  def emittedRows: Long
+}
+
+/** Reads a split's chunk files in order, with one file open at a time. A
+  * pushed limit bounds the whole split: each file reader gets what is left
+  * of it, and no file is opened once it is met (partial pushdown — Spark's
+  * own Limit enforces the global bound over the per-split prefixes). */
+private[sources] final class GraftSplitReader[T](p: GraftInputPartition,
+    open: (GraftFileSpec, Long) => GraftFileReader[T])
+    extends PartitionReader[T] {
+  private var nextFile = 0
+  private var cur: GraftFileReader[T] = _
+  // rows served by the files already closed
+  private var served = 0L
+
+  override def next(): Boolean = {
+    while (p.limit < 0 || served < p.limit) {
+      if (cur == null) {
+        if (nextFile >= p.files.length) return false
+        cur = open(p.files(nextFile), if (p.limit < 0) -1L else p.limit - served)
+        nextFile += 1
+      }
+      if (cur.next()) return true
+      served += cur.emittedRows
+      cur.close()
+      cur = null
+    }
+    false
+  }
+
+  override def get(): T = cur.get()
+
+  override def close(): Unit = if (cur != null) { cur.close(); cur = null }
+}
+
+/** `numFiles`: the chunk files a scan planned, reported from the driver. */
+class GraftNumFilesMetric extends org.apache.spark.sql.connector.metric.CustomSumMetric {
+  override def name(): String = GraftNumFilesMetric.Name
+  override def description(): String = "number of chunk files planned"
+}
+
+object GraftNumFilesMetric {
+  val Name = "numFiles"
+
+  /** A scan that reports the chunk files of its latest plan (a planned
+    * partition may hold several) as the `numFiles` driver metric. */
+  trait Reporting extends Scan {
+    @volatile protected var plannedFiles = 0L
+
+    override def supportedCustomMetrics()
+        : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+      Array(new GraftNumFilesMetric)
+    override def reportDriverMetrics()
+        : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+      val n = plannedFiles
+      Array(new org.apache.spark.sql.connector.metric.CustomTaskMetric {
+        override def name(): String = Name
+        override def value(): Long = n
+      })
+    }
+  }
 }
 
 /** Reads one chunk file with parquet-hadoop's Group API, projecting to the
@@ -1778,12 +1915,14 @@ class GraftReaderFactory(required: StructType,
   * page and surviving records are filtered at assembly — Spark re-checks
   * the same filters above the scan, so the predicate only ever has to keep
   * a superset. */
-class GraftPartitionReader(p: GraftInputPartition, required: StructType,
+class GraftPartitionReader(p: GraftFileSpec, rowCountOnly: Boolean,
+    // rows this file may still serve (−1 = no pushed limit)
+    limit: Long, required: StructType,
     // the scan's shipped session conf, shared across tasks: read-only here
     shared: Configuration,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
-    extends PartitionReader[InternalRow] {
+    extends GraftFileReader[InternalRow] {
 
   private var reader: ParquetReader[Group] = _
   private var cur: Group = _
@@ -1853,7 +1992,7 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
     posFieldIdx = required.fields.zipWithIndex
       .collect { case (f, i) if f.name == GraftDataSource.PosColumn => i }
     val needsOrdinals = posFieldIdx.nonEmpty || dv.nonEmpty
-    if (p.rowCountOnly || !dataFields.exists(f => fieldInFile(f.name).isDefined)) {
+    if (rowCountOnly || !dataFields.exists(f => fieldInFile(f.name).isDefined)) {
       remainingCountRows = rowCount - dv.length
     } else {
       val projection = new MessageType("graft_projection",
@@ -1887,7 +2026,8 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
     }
   }
 
-  private var emittedRows = 0L
+  private var emitted = 0L
+  override def emittedRows: Long = emitted
 
   // is `ord` the next deleted ordinal? (positions are sorted and both read
   // paths visit ordinals ascending, so one cursor pass suffices)
@@ -1895,9 +2035,8 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
     if (dvIdx < dv.length && dv(dvIdx) == ord) { dvIdx += 1; true } else false
 
   override def next(): Boolean = {
-    // pushed limit: stop this partition early (partial pushdown — Spark's
-    // own Limit enforces the global bound over the per-partition prefixes)
-    if (p.limit >= 0 && emittedRows >= p.limit) return false
+    // pushed limit: stop this file early (see GraftSplitReader)
+    if (limit >= 0 && emitted >= limit) return false
     val has =
       if (reader == null) {
         // count mode still honors the vector and the ordinal contract:
@@ -1922,7 +2061,7 @@ class GraftPartitionReader(p: GraftInputPartition, required: StructType,
         }
         keep
       }
-    if (has) emittedRows += 1
+    if (has) emitted += 1
     has
   }
 

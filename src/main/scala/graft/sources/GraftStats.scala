@@ -361,7 +361,8 @@ object GraftStats {
     }
   }
 
-  /** Could some non-null value inside the bounds satisfy every atom? The
+  /** Could some non-null value inside the bounds satisfy every atom (a
+    * disjunction: any of its legs)? The
     * planning-time twin of [[GraftBloom.fileMightMatch]], answered from
     * the manifest with zero I/O. `aliases` maps a CURRENT column name to
     * the spellings old files may have been written under (rename
@@ -396,7 +397,11 @@ object GraftStats {
       val c = java.util.Arrays.compareUnsigned(vb, p)
       if (orEqual) c <= 0 else c < 0
     }
-    atoms.forall { atom =>
+    def might(atom: GraftBloom.SkipAtom): Boolean = atom match {
+      case GraftBloom.OrAtom(legs) => legs.exists(_.forall(might))
+      case a: GraftBloom.ColAtom => colMight(a)
+    }
+    def colMight(atom: GraftBloom.ColAtom): Boolean = {
       val names = atom.col +: aliases.getOrElse(atom.col, Nil)
       def intBound = names.iterator.flatMap(bounds.get).nextOption()
       def strBound = names.iterator.flatMap(sbounds.get).nextOption()
@@ -450,5 +455,6 @@ object GraftStats {
         }
       }
     }
+    atoms.forall(might)
   }
 }

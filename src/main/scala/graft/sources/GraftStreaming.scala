@@ -250,10 +250,11 @@ class GraftMicroBatchStream(path: String, required: StructType,
         }.map { case (f, b) => (f, b, None) }
       case other => throw new IllegalStateException(s"not a graft offset: $other")
     }
+    // one file per partition: micro-batches are not packed into splits
     batch.map { case (f, b, dv) =>
-      GraftInputPartition(f.toString, b, !hasDataCols,
+      GraftInputPartition(Array(GraftFileSpec(f.toString, b,
         dvPath = dv.map(d => new Path(root, d._1).toString).orNull,
-        dvCount = dv.map(_._2).getOrElse(0L)): InputPartition
+        dvCount = dv.map(_._2).getOrElse(0L))), !hasDataCols): InputPartition
     }.toArray
   }
 
@@ -279,9 +280,10 @@ class GraftMicroBatchStream(path: String, required: StructType,
     // vector retired — merge-on-read DELETEs flow through CDC correctly
     def side(base: Long, target: Long, tag: String) =
       GraftVersions.diffFiles(fs, root, base, target, pushed).map { case (f, bk, e) =>
-        GraftInputPartition(f.toString, bk, !hasDataCols, changeTag = tag,
+        GraftInputPartition(Array(GraftFileSpec(f.toString, bk,
           dvPath = e.dv.map(d => new Path(root, d._1).toString).orNull,
-          dvCount = e.dv.map(_._2).getOrElse(0L)): InputPartition
+          dvCount = e.dv.map(_._2).getOrElse(0L), changeTag = tag)),
+          !hasDataCols): InputPartition
       }
     (side(a, b, "insert") ++ side(b, a, "delete")).toArray
   }

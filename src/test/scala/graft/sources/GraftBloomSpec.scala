@@ -11,6 +11,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
+import graft.sources.PlannedFiles._
 
 /** File-level bloom skipping for point lookups on non-bucket columns:
   * write-side bloom production on every write path, sidecar registration,
@@ -97,7 +98,7 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
       Seq(GraftBloom.EqAtom("tag", Array[Any]("t3")))))
     assert(!GraftBloom.fileMightMatch(conf, f,
       Seq(GraftBloom.EqAtom("tag", Array[Any]("t9")))))
-    val miss = scanOf(w.path, Array(EqualTo("tag", "t9"))).planInputPartitions()
+    val miss = scanOf(w.path, Array(EqualTo("tag", "t9"))).plannedFiles()
     assert(miss.isEmpty, s"absent tag planned ${miss.length} files")
   }
 
@@ -108,16 +109,16 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     // disjoint across chunks, and a bloom's false-positive rate over 7
     // foreign files is negligible at these sizes — but tolerate FPs)
     val hit = scanOf(w.path, Array(EqualTo("doc", 10000L + 515L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(hit.length >= 1 && hit.length < total,
       s"expected a strict file drop, planned ${hit.length}/$total")
     // absent value: every file refuted, zero tasks scheduled
     val miss = scanOf(w.path, Array(EqualTo("doc", 999999L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(miss.isEmpty, s"absent key planned ${miss.length} files")
     // IN with one present candidate keeps the owning file
     val in = scanOf(w.path, Array(In("doc", Array(999999L, 10000L))))
-      .planInputPartitions()
+      .plannedFiles()
     assert(in.length >= 1 && in.length < total)
   }
 
@@ -129,12 +130,12 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     // ranges disjoint: a 100-wide band overlaps at most 2 of 8 files
     val band = scanOf(w.path, Array(
       GreaterThanOrEqual("doc", 10200L), LessThanOrEqual("doc", 10300L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(band.length >= 1 && band.length <= 2,
       s"band should plan <=2 of $total files, planned ${band.length}")
     // an out-of-domain range refutes every file
     val none = scanOf(w.path, Array(GreaterThan("doc", 99999L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(none.isEmpty, s"absent range planned ${none.length} files")
     // end-to-end: the banded read is row-exact
     val got = spark.read.format("graft").load(w.path)
@@ -163,7 +164,7 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     val w = mkWorld(bloom = false)
     val total = chunkFiles(w.path).size
     val planned = scanOf(w.path, Array(EqualTo("doc", 999999L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(planned.length == total, "without registered blooms nothing drops")
   }
 
@@ -202,7 +203,7 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // and the point lookup skips: value present only in c0=7's range
     val planned = scanOf(path, Array(EqualTo("doc", 500L + 127L)))
-      .planInputPartitions()
+      .plannedFiles()
     assert(planned.length < files.size)
   }
 
@@ -228,19 +229,19 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     // unit: a runtime EqualTo on the registered high-cardinality column
     // drops planning to the one file whose bloom can hold the key
     val scan = scanOf(w.path, Array.empty)
-    val all = scan.planInputPartitions().length
+    val all = scan.plannedFiles().length
     assert(all == 8)
     assert(scan.filterAttributes().map(_.toString).toSet == Set("doc"),
       "registered data columns are declared filterable (no bucket col in " +
         "this projection; WorldSpec pins the bucket-col declaration)")
     scan.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("doc", 10500L)))
-    assert(scan.planInputPartitions().length == 1,
+    assert(scan.plannedFiles().length == 1,
       "runtime key must skip the 7 files whose blooms refute it")
     // an UNregistered world ignores the same runtime filter (never over-prunes)
     val w2 = mkWorld(bloom = false)
     val s2 = scanOf(w2.path, Array.empty)
     s2.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("doc", 10500L)))
-    assert(s2.planInputPartitions().length == 8)
+    assert(s2.plannedFiles().length == 8)
     assert(s2.filterAttributes().isEmpty,
       "unregistered world, bucket-free projection: nothing filterable")
 
@@ -272,7 +273,7 @@ class GraftBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     // runtime join-delivered key on the registered column (what a MERGE's
     // group filter would deliver): 7 of 8 files bloom-refuted
     scan.filter(Array[org.apache.spark.sql.sources.Filter](EqualTo("doc", 10500L)))
-    val planned = scan.planInputPartitions()
+    val planned = scan.plannedFiles()
     assert(planned.length < 8, s"bloom skip must engage, planned ${planned.length}")
     assert(rec.size == planned.length,
       s"recorder must equal the survivor set: rec=${rec.size} planned=${planned.length}")

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
+import graft.sources.PlannedFiles._
 
 /** Manifest-carried ZONE MAPS (sources/GraftStats.scala): commits capture
   * per-file integral min/max bounds into the version manifest, and planning
@@ -60,20 +61,20 @@ class GraftStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val idBounds = entries.map(_.stats("id")).sortBy(_._1)
     assert(idBounds.map(_._1).min == 0L && idBounds.map(_._2).max == 299L)
 
-    val all = scanOf(path, Array.empty).planInputPartitions().length
+    val all = scanOf(path, Array.empty).plannedFiles().length
     assert(all == entries.size, "no atoms: every live file planned")
 
     // range refutation: only the [200,299] commit's file(s) survive
     val hi = scanOf(path, Array(GreaterThan("id", 220L)))
-    assert(hi.planInputPartitions().length < all)
+    assert(hi.plannedFiles().length < all)
     assert(hi.description().contains("ZoneSkipCols: [id]"))
     // point refutation on the DERIVED column v (= id*2): 300 lives in file 2
     val pt = scanOf(path, Array(EqualTo("v", 300L)))
-    assert(pt.planInputPartitions().length == 1,
+    assert(pt.plannedFiles().length == 1,
       s"v=300 lives in exactly one commit's bounds")
     // an impossible predicate plans ZERO files — and zero footer reads
     assert(scanOf(path, Array(GreaterThan("id", 10000L)))
-      .planInputPartitions().isEmpty)
+      .plannedFiles().isEmpty)
     // results stay exact through the skip
     assert(spark.sql("SELECT count(*) FROM zcat.z WHERE id > 220").head.getLong(0) == 79L)
     assert(spark.sql("SELECT id FROM zcat.z WHERE v = 300").head.getLong(0) == 150L)
@@ -97,19 +98,19 @@ class GraftStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
         StructType(Seq(StructField("id", LongType),
           StructField("ts", TimestampType))),
         pushed = Array.empty, residual = residual)
-    val all = scan(Array.empty).planInputPartitions().length
+    val all = scan(Array.empty).plannedFiles().length
     assert(all == entries.size)
     // last hour only: both java.sql.Timestamp and Instant operand shapes
     val cut = java.sql.Timestamp.valueOf("2026-01-01 02:00:00")
     assert(scan(Array(org.apache.spark.sql.sources
-      .GreaterThanOrEqual("ts", cut))).planInputPartitions().length < all)
+      .GreaterThanOrEqual("ts", cut))).plannedFiles().length < all)
     val cutI = cut.toInstant
     assert(scan(Array(org.apache.spark.sql.sources
-      .GreaterThanOrEqual("ts", cutI))).planInputPartitions().length < all)
+      .GreaterThanOrEqual("ts", cutI))).plannedFiles().length < all)
     // a window after every bound plans zero files
     assert(scan(Array(org.apache.spark.sql.sources.GreaterThan("ts",
       java.sql.Timestamp.valueOf("2026-01-02 00:00:00"))))
-      .planInputPartitions().isEmpty)
+      .plannedFiles().isEmpty)
     // end-to-end row-exactness through the skip
     assert(spark.sql(
       "SELECT count(*) FROM zcat.zt WHERE ts >= timestamp'2026-01-01 02:00:00'")
@@ -157,16 +158,16 @@ class GraftStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
         StructType(Seq(StructField("id", LongType),
           StructField("name", StringType))),
         pushed = Array.empty, residual = residual)
-    val all = scan(Array.empty).planInputPartitions().length
+    val all = scan(Array.empty).plannedFiles().length
     assert(all == entries.size)
     // equality under a cold prefix prunes to one commit's file(s)
-    assert(scan(Array(EqualTo("name", "mango_75"))).planInputPartitions()
+    assert(scan(Array(EqualTo("name", "mango_75"))).plannedFiles()
       .length < all)
     // a range above every bound plans zero files
-    assert(scan(Array(GreaterThan("name", "zz"))).planInputPartitions().isEmpty)
+    assert(scan(Array(GreaterThan("name", "zz"))).plannedFiles().isEmpty)
     // the truncated bound does NOT refute a value extending its prefix
     assert(scan(Array(EqualTo("name", "zanzibar_longname_149")))
-      .planInputPartitions().nonEmpty,
+      .plannedFiles().nonEmpty,
       "a cut max bound must keep values sharing the cut prefix")
     // end-to-end row-exactness through the skip
     assert(spark.sql("SELECT count(*) FROM zcat.zs WHERE name >= 'mango'")
@@ -226,8 +227,8 @@ class GraftStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // through the alias and still drop the old file for a high range
     val hi = scanOf(path, Array(GreaterThan("doc_id", 500L)), Seq("doc_id", "v"))
     val all = scanOf(path, Array.empty, Seq("doc_id", "v"))
-      .planInputPartitions().length
-    assert(hi.planInputPartitions().length < all,
+      .plannedFiles().length
+    assert(hi.plannedFiles().length < all,
       "pre-rename file with id<=49 must be zone-pruned for doc_id > 500")
     assert(spark.sql("SELECT count(*) FROM zcat.zr WHERE doc_id > 500")
       .head.getLong(0) == 50L)
@@ -264,13 +265,13 @@ class GraftStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import org.apache.spark.sql.types.StringType
     val all = new GraftScan(path,
       StructType(Seq(StructField("id", LongType), StructField("name", StringType))),
-      pushed = Array.empty, residual = Array.empty).planInputPartitions().length
+      pushed = Array.empty, residual = Array.empty).plannedFiles().length
     // post-overwrite live files all span id 0..49: a bound above every
     // max plans ZERO files purely from the writer-captured manifest
     val hi = new GraftScan(path,
       StructType(Seq(StructField("id", LongType), StructField("name", StringType))),
       pushed = Array.empty,
-      residual = Array(GreaterThan("id", 100L))).planInputPartitions().length
+      residual = Array(GreaterThan("id", 100L))).plannedFiles().length
     assert(all > 0 && hi == 0, "writer-captured zone maps must still drop files")
     assert(spark.sql("SELECT count(*) FROM zcat.zw WHERE id > 40").head.getLong(0) == 9L)
   }

@@ -152,7 +152,7 @@ class GraftStreamCursorSpec extends AnyFunSuite with BeforeAndAfterAll {
       "an unsealed file must not advance the offset")
     val parts = stream.planInputPartitions(
       stream.initialOffset(), GraftVersionOffset(1))
-    assert(parts.map(_.asInstanceOf[GraftInputPartition].file)
+    assert(PlannedFiles.of(parts).map(_.file)
       .forall(!_.contains("part-stray")),
       "an unsealed file must not enter a batch")
     fs.delete(stray, false)
@@ -168,8 +168,8 @@ class GraftStreamCursorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the batch planned against the stale cursor still reads v1's BYTES:
     // manifest-only retirement left the superseded file in place, so the
     // plan points at the original path and its pre-update values
-    val parts = stream.planInputPartitions(stream.initialOffset(), end)
-      .map(_.asInstanceOf[GraftInputPartition].file)
+    val parts = PlannedFiles.of(
+      stream.planInputPartitions(stream.initialOffset(), end)).map(_.file)
     assert(parts.nonEmpty, "stale-cursor batch plans v1's files")
     val vs = spark.read.parquet(parts.toSeq: _*).select("v")
       .collect().map(_.getLong(0)).toSeq
@@ -182,9 +182,8 @@ class GraftStreamCursorSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("INSERT INTO scur.s5 VALUES (1, 10, 0), (2, 20, 1), (3, 30, 2)")
     val stream = new GraftMicroBatchStream(s"$warehouse/s5", schema,
       Array[Filter](EqualTo("c0", 1L)))
-    val parts = stream.planInputPartitions(
-      stream.initialOffset(), stream.latestOffset())
-      .map(_.asInstanceOf[GraftInputPartition])
+    val parts = PlannedFiles.of(stream.planInputPartitions(
+      stream.initialOffset(), stream.latestOffset()))
     assert(parts.nonEmpty && parts.forall(_.buckets("c0") == 1L),
       s"only the matching cell enters the batch: ${parts.map(_.file).toSeq}")
   }
@@ -206,8 +205,7 @@ class GraftStreamCursorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val healed = stream.latestOffset()
     assert(healed == GraftVersionOffset(2), "healed commit restores the cursor")
     // mixed plan (file-set start, version end): only the new commit's files
-    val parts = stream.planInputPartitions(deg, healed)
-      .map(_.asInstanceOf[GraftInputPartition])
+    val parts = PlannedFiles.of(stream.planInputPartitions(deg, healed))
     assert(parts.nonEmpty && parts.forall(_.buckets("c0") == 1L),
       s"only commit v2's cell enters the batch: ${parts.map(_.file).toSeq}")
   }

@@ -1,6 +1,7 @@
 package graft.world
 
 import graft.core._
+import graft.sources.PlannedFiles._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -264,16 +265,16 @@ class WorldSpec extends AnyFunSuite with BeforeAndAfterAll {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
     }.get
     val scan = scanExec.scan.asInstanceOf[graft.sources.GraftScan]
-    assert(scan.planInputPartitions().length == 10)
+    assert(scan.plannedFiles().length == 10)
     assert(scan.filterAttributes().map(_.toString).toSet == Set("c0", "c1"))
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("c0", 3L)))
-    assert(scan.planInputPartitions().length == 1,
+    assert(scan.plannedFiles().length == 1,
       "runtime bucket filter must prune chunk planning")
     // non-bucket runtime filters are ignored, never over-prune
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.EqualTo("d1", 35L)))
-    assert(scan.planInputPartitions().length == 10)
+    assert(scan.plannedFiles().length == 10)
     // end-to-end: Spark's PartitionPruning plants a dynamic IN-subquery of
     // the broadcast dim's join keys and delivers the materialized values to
     // this scan before partition planning (a LocalRelation dim would NOT
@@ -543,7 +544,7 @@ class WorldSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(scan.scan.description().contains("PushedTopN: [c0 DESC]"),
       s"top-N must reach the scan: ${scan.scan.description()}")
     assert(scan.scan.asInstanceOf[graft.sources.GraftScan]
-      .planInputPartitions().length == 2,
+      .plannedFiles().length == 2,
       "only the leading chunk dirs may be planned")
     // multi-column order, mixed directions
     val q2 = df.orderBy(col("c0").asc, col("c1").desc).limit(5).select("d0")
