@@ -88,8 +88,7 @@ object GraftBloom {
     val existing = columns(fs, root)
     val merged = (existing ++ cols).distinct
     if (merged != existing || (!fs.exists(sidecar(root)) && merged.nonEmpty)) {
-      fs.mkdirs(root)
-      val out = fs.create(sidecar(root), true)
+      val out = GraftHadoop.create(fs, sidecar(root), overwrite = true)
       try out.write((merged.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
     }

@@ -444,7 +444,7 @@ class GraftCatalog extends TableCatalog
           "use regrid for layout changes")
     }
     val f = fs()
-    val out = f.create(new Path(s"$p/_graft_schema.json"), true)
+    val out = GraftHadoop.create(f, new Path(s"$p/_graft_schema.json"), overwrite = true)
     out.write(updated.json.getBytes("UTF-8")); out.close()
     new GraftTable(p, updated, viaCatalog = true)
   }
@@ -464,7 +464,7 @@ class GraftCatalog extends TableCatalog
 
   private def noteDropped(tablePath: String, name: String): Unit = {
     val all = droppedNames(tablePath) + name
-    val out = fs().create(droppedPath(tablePath), true)
+    val out = GraftHadoop.create(fs(), droppedPath(tablePath), overwrite = true)
     try out.write((all.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
   }
@@ -771,7 +771,7 @@ class GraftRegridProcedure(cat: GraftCatalog)
           schema.fields.filterNot(f => GraftDataSource.isBucket(f.name)).toSeq ++
             newBuckets.map(c => StructField(c,
               org.apache.spark.sql.types.LongType, nullable = true)))
-        val out = fs.create(new Path(s"$path/_graft_schema.json"), true)
+        val out = GraftHadoop.create(fs, new Path(s"$path/_graft_schema.json"), overwrite = true)
         try out.write(newSchema.json.getBytes("UTF-8")) finally out.close()
         GraftProcedures.singleRow("version", sealedV)
       } finally fs.delete(stage, true)

@@ -66,8 +66,7 @@ private[graft] object GraftChecks {
       s"graft set_check '$name': $bad existing row(s) violate ($sql) — " +
         "clean the data first; a check is an invariant, not an aspiration")
     val d = dirOf(new Path(path))
-    fs.mkdirs(d)
-    val out = fs.create(new Path(d, name), true)
+    val out = GraftHadoop.create(fs, new Path(d, name), overwrite = true)
     try out.write(sql.getBytes("UTF-8")) finally out.close()
     bad
   }

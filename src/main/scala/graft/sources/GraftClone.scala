@@ -98,7 +98,7 @@ object GraftClone {
     copySidecar(sfs, sroot, tfs, troot, "_graft_schema.json", required = true)
     copySidecar(sfs, sroot, tfs, troot, GraftBloom.SidecarName, required = false)
 
-    val out = tfs.create(new Path(troot, PointerName), true)
+    val out = GraftHadoop.create(tfs, new Path(troot, PointerName), overwrite = true)
     try out.write(s"$srcPath\n$v\n".getBytes("UTF-8")) finally out.close()
     v
   }
@@ -125,7 +125,7 @@ object GraftClone {
     }
     val in = sfs.open(from)
     val bytes = try in.readAllBytes() finally in.close()
-    val out = tfs.create(new Path(troot, name), true)
+    val out = GraftHadoop.create(tfs, new Path(troot, name), overwrite = true)
     try out.write(bytes) finally out.close()
   }
 }

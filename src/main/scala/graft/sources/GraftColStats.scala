@@ -258,7 +258,7 @@ private[graft] object GraftColStats {
           .mkString("\t")).append('\n')
       }
     }
-    val out = fs.create(fileOf(path), true)
+    val out = GraftHadoop.create(fs, fileOf(path), overwrite = true)
     try out.write(sb.toString.getBytes("UTF-8")) finally out.close()
   }
 

@@ -186,14 +186,17 @@ object GraftDataSource {
     * write_chunk` needing no prior setup (/root/reference/tokio-fs/src/
     * lib.rs:84-107). Never overwrites: an existing sidecar (World.create's,
     * or a previous write's) stays authoritative for readers of data already
-    * on disk. */
+    * on disk. Two writers racing on a virgin path both pass the `exists`
+    * probe; the loser's exclusive create fails, and the winner's sidecar
+    * is the one that stays. */
   private[sources] def writeSidecarIfAbsent(path: String, schema: StructType): Unit = {
     val fs = GraftHadoop.fs(path)
     val p = new Path(s"$path/_graft_schema.json")
     if (!fs.exists(p)) {
-      val out = fs.create(p, false)
-      out.write(schema.json.getBytes("UTF-8"))
-      out.close()
+      try {
+        val out = GraftHadoop.create(fs, p, overwrite = false)
+        try out.write(schema.json.getBytes("UTF-8")) finally out.close()
+      } catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => () }
     }
   }
 
@@ -231,7 +234,7 @@ object GraftDataSource {
     val fs = GraftHadoop.fs(path)
     val p = new Path(path, RenamesSidecarName)
     if (m.isEmpty) { fs.delete(p, false); return }
-    val out = fs.create(p, true)
+    val out = GraftHadoop.create(fs, p, overwrite = true)
     try out.write(m.toSeq.sortBy(_._1)
       .map { case (c, as) => (c +: as).mkString("\t") }.mkString("\n")
       .concat("\n").getBytes("UTF-8"))

@@ -82,8 +82,7 @@ private[graft] object GraftDv {
     }
     val rel = s"$DvDir/${java.util.UUID.randomUUID()}.dv"
     val p = new Path(root, rel)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, false)
+    val out = GraftHadoop.create(fs, p, overwrite = false)
     try {
       val buf = java.nio.ByteBuffer.allocate(
         Magic.length + 8 + positions.length * 8)
@@ -197,7 +196,8 @@ private[graft] object GraftDv {
     val pfr = GraftHadoop.openFooter(src, conf)
     val schema = try pfr.getFooter.getFileMetaData.getSchema finally pfr.close()
     GroupWriteSupport.setSchema(schema, conf)
-    val writer = new GraftParquetWriterBuilder(dst, new GroupWriteSupport())
+    val writer = new GraftParquetWriterBuilder(GraftHadoop.outputFile(dst, conf),
+        new GroupWriteSupport())
       .withConf(conf)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)

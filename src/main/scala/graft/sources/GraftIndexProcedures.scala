@@ -52,8 +52,7 @@ private[sources] object GraftIndexDescriptor {
   def write(idx: String, kv: Map[String, String]): Unit = {
     val fs = GraftHadoop.fs(idx)
     val p = new Path(idx + "__meta", File)
-    fs.mkdirs(p.getParent)
-    val out = fs.create(p, true)
+    val out = GraftHadoop.create(fs, p, overwrite = true)
     try out.write(kv.toSeq.sortBy(_._1)
       .map { case (k, v) => s"$k=$v" }.mkString("", "\n", "\n")
       .getBytes("UTF-8"))

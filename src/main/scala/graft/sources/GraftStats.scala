@@ -90,8 +90,7 @@ object GraftStats {
 
   /** Persist the declared mode (driver-side, idempotent). */
   def declare(fs: FileSystem, root: Path, value: String): Unit = {
-    fs.mkdirs(root)
-    val out = fs.create(sidecar(root), true)
+    val out = GraftHadoop.create(fs, sidecar(root), overwrite = true)
     try out.write((value.trim + "\n").getBytes("UTF-8")) finally out.close()
   }
 

@@ -242,7 +242,8 @@ private[graft] object GraftVersions {
     fs.mkdirs(dir)
     fs.listStatus(dir).filter(_.getPath.getName.startsWith(RetentionPrefix))
       .foreach(s => fs.delete(s.getPath, false))
-    if (keep >= 1) fs.create(new Path(dir, s"$RetentionPrefix$keep"), true).close()
+    if (keep >= 1)
+      GraftHadoop.create(fs, new Path(dir, s"$RetentionPrefix$keep"), overwrite = true).close()
   }
 
   private val CompactionPrefix = "compaction-"
@@ -262,7 +263,7 @@ private[graft] object GraftVersions {
     fs.listStatus(dir).filter(_.getPath.getName.startsWith(CompactionPrefix))
       .foreach(s => fs.delete(s.getPath, false))
     if (maxFiles >= 1)
-      fs.create(new Path(dir, s"$CompactionPrefix$maxFiles"), true).close()
+      GraftHadoop.create(fs, new Path(dir, s"$CompactionPrefix$maxFiles"), overwrite = true).close()
   }
 
   /** Versions with a committed manifest, ascending. */
@@ -475,22 +476,16 @@ private[graft] object GraftVersions {
     * CHECK-THEN-ACT (an exists() probe followed by an open), so two
     * in-JVM racers can BOTH pass the probe and both believe they hold the
     * claim — the double-claim would let the second promote overwrite the
-    * winner's manifest. On the local scheme `File.createNewFile()` is the
-    * real O_CREAT|O_EXCL primitive (atomic in-process and cross-process);
-    * elsewhere the filesystem's own create-exclusive is used (atomic on
-    * HDFS by contract; see the object doc for the S3 mapping). */
+    * winner's manifest. [[GraftHadoop.create]] opens local files with
+    * `CREATE_NEW`, the real O_CREAT|O_EXCL primitive (atomic in-process and
+    * cross-process); elsewhere the filesystem's own create-exclusive is
+    * used (atomic on HDFS by contract; see the object doc for the S3
+    * mapping). */
   private def createExclusive(fs: FileSystem, p: Path): Boolean =
-    if ("file" == fs.getUri.getScheme) {
-      val f = new java.io.File(p.toUri.getPath)
-      f.getParentFile.mkdirs()
-      try f.createNewFile()
-      catch { case _: java.io.IOException => false }
-    } else {
-      try { fs.create(p, false).close(); true }
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-        case e: java.io.IOException => if (fs.exists(p)) false else throw e
-      }
+    try { GraftHadoop.create(fs, p, overwrite = false).close(); true }
+    catch {
+      case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
+      case e: java.io.IOException => if (fs.exists(p)) false else throw e
     }
 
   private def writeManifestCas(fs: FileSystem, root: Path, v: Long,
@@ -529,7 +524,6 @@ private[graft] object GraftVersions {
       if (sameModulus) base.get.refs.map(r => r.sid -> r).toMap else Map.empty
 
     val segsDir = new Path(p.getParent, SegsDirName)
-    var madeDirs = false
     val bySid = files.groupBy(e => sidOf(e.rel, s))
     val refs = bySid.toSeq.sortBy(_._1).map { case (sid, group) =>
       val reusable = touchedSids.exists(!_.contains(sid))
@@ -542,9 +536,8 @@ private[graft] object GraftVersions {
           val bytes = (s"$SegmentHeader ${group.size}\n" +
             group.sortBy(_.rel).map(entryLine).mkString("\n") + "\n")
             .getBytes("UTF-8")
-          if (!madeDirs) { fs.mkdirs(segsDir); madeDirs = true }
           val tmp = new Path(segsDir, s".tmp-${java.util.UUID.randomUUID()}")
-          val out = fs.create(tmp, true)
+          val out = GraftHadoop.create(fs, tmp, overwrite = true)
           out.write(bytes)
           out.close()
           val dest = new Path(p.getParent, rel)
@@ -564,7 +557,6 @@ private[graft] object GraftVersions {
   private def writeManifestCasAt(fs: FileSystem, p: Path, v: Long,
       files: Seq[ManifestEntry], base: Option[SegBase] = None,
       touched: Option[Set[String]] = None): CasResult = {
-    fs.mkdirs(p.getParent)
     if (fs.exists(p)) return CasLost
     // BY-NAME: segment files are a side effect of building the root bytes,
     // so the build must run only once the claim is held (claimThenPromote)
@@ -609,7 +601,7 @@ private[graft] object GraftVersions {
       // on stores whose rename replaces the destination).
       val token = java.util.UUID.randomUUID().toString
       locally {
-        val out = fs.create(claim, true)
+        val out = GraftHadoop.create(fs, claim, overwrite = true)
         out.write(token.getBytes("UTF-8"))
         out.close()
       }
@@ -625,7 +617,7 @@ private[graft] object GraftVersions {
       if (!stillOurs) { ours = false; return CasLost } // usurper's claim: leave it
       if (fs.exists(p)) return CasLost
       val tmp = new Path(p.getParent, s".tmp-${java.util.UUID.randomUUID()}")
-      val out = fs.create(tmp, true)
+      val out = GraftHadoop.create(fs, tmp, overwrite = true)
       out.write(content)
       out.close()
       if (!fs.rename(tmp, p)) { fs.delete(tmp, false); return CasLost }
@@ -647,7 +639,7 @@ private[graft] object GraftVersions {
     // misread as a CAS loss by the exists-check below
     val content = bytes
     try {
-      val out = fs.create(p, false)
+      val out = GraftHadoop.create(fs, p, overwrite = false)
       out.write(content)
       out.close()
       CasSealed
@@ -1150,7 +1142,7 @@ private[graft] object GraftVersions {
         }
       }
     }
-    fs.create(barrierPath(root), true).close()
+    GraftHadoop.create(fs, barrierPath(root), overwrite = true).close()
   }
 
   /** Is a World-rewrite barrier pending (manifests stale until the next
@@ -1292,10 +1284,8 @@ private[graft] object GraftVersions {
     java.lang.Long.getLong("graft.rollback.claimTtlMs", 60L * 60 * 1000)
 
   private[sources] def writeClaim(fs: FileSystem, root: Path, v: Long): Path = {
-    val d = claimsDir(root)
-    fs.mkdirs(d)
-    val p = new Path(d, s"claim-v$v-${java.util.UUID.randomUUID()}")
-    fs.create(p, false).close()
+    val p = new Path(claimsDir(root), s"claim-v$v-${java.util.UUID.randomUUID()}")
+    GraftHadoop.create(fs, p, overwrite = false).close()
     p
   }
 
@@ -1590,7 +1580,7 @@ private[graft] object GraftVersions {
     require(TagName.matcher(name).matches(),
       s"graft tag: name '$name' must match [A-Za-z][A-Za-z0-9._-]*")
     readManifest(fs, root, v) // tag only committed, retained versions
-    val out = fs.create(tagPath(root, name), true)
+    val out = GraftHadoop.create(fs, tagPath(root, name), overwrite = true)
     out.write(s"$v\n".getBytes("UTF-8"))
     out.close()
   }
@@ -1642,7 +1632,7 @@ private[graft] object GraftVersions {
       s"graft branch: $root has no versioned commits to fork from"))
     require(branchFork(fs, root, name).isEmpty,
       s"graft branch: '$name' already exists")
-    val out = fs.create(branchMarkerPath(root, name), true)
+    val out = GraftHadoop.create(fs, branchMarkerPath(root, name), overwrite = true)
     out.write(s"$latest\n".getBytes("UTF-8")); out.close()
     latest
   }
@@ -1867,7 +1857,7 @@ private[graft] object GraftVersions {
         } else if (pl.claims) {
           val tmp = new Path(target.getParent,
             s".tmp-${java.util.UUID.randomUUID()}")
-          val out = pl.fs.create(tmp, true)
+          val out = GraftHadoop.create(pl.fs, tmp, overwrite = true)
           // segment-aware: a v3 branch head publishes by reference
           out.write(buildRootBytes(pl.fs, target, pl.newV, pl.entries,
             pl.segs, Some(Set.empty)))
@@ -1895,7 +1885,7 @@ private[graft] object GraftVersions {
 
   private def writePublishIntent(fs: FileSystem, root: Path, name: String,
       v: Long): Unit = {
-    val out = fs.create(publishIntentPath(root, name), true)
+    val out = GraftHadoop.create(fs, publishIntentPath(root, name), overwrite = true)
     try out.write(s"$v\n".getBytes("UTF-8")) finally out.close()
   }
 

@@ -362,7 +362,8 @@ class GraftOverwriteWrite(path: String, schema: StructType,
         // schema is now authoritative for readers. On a BRANCH the sidecar
         // stays untouched — it is table-global, so rewriting it would leak
         // the staged schema to main readers before fast_forward
-        val out = fs.create(new Path(s"$path/_graft_schema.json"), true)
+        val out = GraftHadoop.create(fs,
+          new Path(s"$path/_graft_schema.json"), overwrite = true)
         out.write(schema.json.getBytes("UTF-8")); out.close()
       } else GraftDataSource.writeSidecarIfAbsent(path, schema)
     // victims: filter-matching chunks' files (static) or the files of the
@@ -848,7 +849,8 @@ class GraftStreamingWrite(path: String, schema: StructType,
           val added =
             GraftStage.moveIn(fs, stageRoot, root, staged, stagedStats) ++ gridAdded
           if (branch.isEmpty) {
-            val out = fs.create(new Path(s"$path/_graft_schema.json"), true)
+            val out = GraftHadoop.create(fs,
+              new Path(s"$path/_graft_schema.json"), overwrite = true)
             out.write(schema.json.getBytes("UTF-8")); out.close()
           } else GraftDataSource.writeSidecarIfAbsent(path, schema)
           GraftVersions.sealCommit(fs, root, c, removed, added)
@@ -891,8 +893,7 @@ class GraftStreamingWrite(path: String, schema: StructType,
           }
           GraftDataSource.writeSidecarIfAbsent(path, schema)
       }
-      fs.mkdirs(markerFor(epochId).getParent)
-      fs.create(markerFor(epochId), true).close()
+      GraftHadoop.create(fs, markerFor(epochId), overwrite = true).close()
       // opportunistic marker pruning: replay only re-offers tail epochs.
       // Each stream prunes only ITS OWN namespace (bare numbers for main,
       // `b-<branch>-<n>` for a staging stream).
@@ -1052,14 +1053,17 @@ class GraftBatchWrite(path: String, schema: StructType,
   // World.create would
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     GraftDataSource.writeSidecarIfAbsent(path, schema)
+    val root = new Path(path)
+    val added = GraftStage.messageEntries(root, messages)
+    // an append of no rows wrote no file and changes no state: it seals no
+    // version (the write-behind daemon's empty batches cost no commit)
+    if (added.isEmpty) return
     // version the append: nothing retires, but the post-commit manifest
     // makes this state addressable by VERSION AS OF. Append tasks write
     // straight into the grid, so THIS commit's files must not leak into a
     // first-commit baseline manifest; the seal is incremental (predecessor
     // + this commit's files) — an append never pays a grid walk.
     val fs = GraftHadoop.fs(path)
-    val root = new Path(path)
-    val added = GraftStage.messageEntries(root, messages)
     val c = branch match {
       // branch staging: the seal goes to the branch's own manifest chain;
       // auto-compaction stays a main-log policy (runs after publish)
@@ -1165,8 +1169,9 @@ private[sources] final class SummingGroupWriteSupport(tracker: SumTracker)
 
 /** [[ExampleParquetWriter]]'s builder with a caller-supplied write support
   * (the stock one hardcodes a plain [[GroupWriteSupport]], which cannot
-  * carry the finalize-time sums metadata). */
-private[sources] final class GraftParquetWriterBuilder(file: Path,
+  * carry the finalize-time sums metadata). Takes an `OutputFile` from
+  * [[GraftHadoop.outputFile]], never a `Path`. */
+private[sources] final class GraftParquetWriterBuilder(file: org.apache.parquet.io.OutputFile,
     ws: org.apache.parquet.hadoop.api.WriteSupport[org.apache.parquet.example.data.Group])
     extends ParquetWriter.Builder[org.apache.parquet.example.data.Group, GraftParquetWriterBuilder](file) {
   override def self(): GraftParquetWriterBuilder = this
@@ -1304,7 +1309,7 @@ class GraftDataWriter(path: String, schema: StructType, partitionId: Int,
           stats = new GraftStats.WriterStatsTracker(statsCols)
           statsTrackers += stats
         }
-        val b = new GraftParquetWriterBuilder(new Path(file),
+        val b = new GraftParquetWriterBuilder(GraftHadoop.outputFile(new Path(file), c),
             new SummingGroupWriteSupport(tracker)).withConf(c)
           // parquet-mr's builder default is UNCOMPRESSED — at 100 TB that
           // is 2-4x the bytes on every chunk the connector writes. Snappy

@@ -61,8 +61,7 @@ object GraftZOrder {
   /** Replace the declared z-order columns (ORDER is significant — it is
     * the interleave order — so unlike blooms this is a set, not a union). */
   def register(fs: FileSystem, root: Path, cols: Seq[String]): Unit = {
-    fs.mkdirs(root)
-    val out = fs.create(sidecar(root), true)
+    val out = GraftHadoop.create(fs, sidecar(root), overwrite = true)
     try out.write((cols.mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
   }

@@ -36,6 +36,9 @@ object Daemon {
     *     (`LEAST_WRITES`, /root/reference/tokio-fs/src/lib.rs:213-234): pay
     *     the rewrite once per threshold, not once per batch. Use when ids
     *     are fresh per batch (event logs), which is the high-frequency case.
+    *     A batch runs no emptiness job first: an empty batch's append
+    *     writes no file and seals no version. `compactEvery` counts
+    *     micro-batches, empty ones included.
     *
     * Delivery caveat, stated honestly: `foreachBatch` is at-least-once — a
     * batch that crashes after its append but before the checkpoint commit
@@ -54,14 +57,12 @@ object Daemon {
       .trigger(Trigger.ProcessingTime(interval))
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        if (!batch.isEmpty) {
-          if (mode == "append") {
-            world.append(batch.toDF())
-            if (batches.incrementAndGet() % compactEvery == 0) {
-              world.compact(maxFilesPerChunk); ()
-            }
-          } else { world.insert(batch.toDF()); () }
-        }
+        if (mode == "append") {
+          world.append(batch.toDF())
+          if (batches.incrementAndGet() % compactEvery == 0) {
+            world.compact(maxFilesPerChunk); ()
+          }
+        } else if (!batch.isEmpty) { world.insert(batch.toDF()); () }
       }
       .start()
     installShutdownFlush(q)

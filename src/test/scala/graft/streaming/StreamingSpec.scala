@@ -85,6 +85,38 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     } finally q.stop()
   }
 
+  test("daemon append mode: an empty batch seals no version; compaction still counts batches") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val path = tmp()
+    val w = new World(spark, path, Seq(
+      DimSpec("d0", DimMapping(0, 1023, 8)), DimSpec("d1", DimMapping(0, 1023, 16))))
+    w.create(Seq((1L, 1L)).toDF("d0", "d1"))
+    val fs = graft.sources.GraftHadoop.fs(path)
+    val root = new org.apache.hadoop.fs.Path(path)
+    def version: Option[Long] = graft.sources.GraftVersions.latestVersion(fs, root)
+    def liveFiles: Int = graft.sources.GraftDataSource.liveCells(fs, root, Array.empty)
+      .map { case (_, _, files) => files.size }.sum
+    val src = MemoryStream[(Long, Long)]
+    // compactEvery=4 micro-batches, the empty one included
+    val q = Daemon.start(w, src.toDF().toDF("d0", "d1"), tmp(),
+      interval = "1 second", mode = "append", compactEvery = 4, maxFilesPerChunk = 1)
+    try {
+      src.addData((2L, 2L)); q.processAllAvailable()
+      val v1 = version
+      assert(v1.isDefined, "a batch with rows seals a version")
+      src.addData(Seq.empty[(Long, Long)]); q.processAllAvailable()
+      assert(q.recentProgress.exists(_.numInputRows == 0), "the empty batch ran")
+      assert(version == v1, "an empty batch seals no version")
+      src.addData((3L, 3L)); q.processAllAvailable()
+      assert(liveFiles >= 3, "append path must not rewrite per batch")
+      src.addData((4L, 4L)); q.processAllAvailable() // batch 4 -> compact
+      assert(liveFiles == 1, "compaction triggers at the fourth micro-batch")
+      val got = w.df.select("d0").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == Seq(1L, 2L, 3L, 4L), "rows exact across an empty batch + compact")
+    } finally q.stop()
+  }
+
   test("world as a streaming source: new chunk files are discovered incrementally") {
     import spark.implicits._
     val w = new World(spark, tmp(), Seq(
