@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for LLM-data pipelines (north-star extension).
   *
@@ -10,7 +11,7 @@ import org.apache.spark.sql.expressions.Window
   *   - exact dedup is a hash-groupBy — one shuffle on the 16-byte digest, no
   *     text comparison;
   *   - near-dup (MinHash/SimHash) NEVER does all-pairs: candidate pairs come
-  *     from equality joins on band/block keys (shuffle on short keys), the
+  *     from buckets on band/block keys (one shuffle on the bucket key), the
   *     expensive verify runs only on candidates. All signature computation is
   *     pure Catalyst expressions (codegen'd, per-row, shuffle-free).
   */
@@ -319,11 +320,13 @@ object Dedup {
     // three longs a row — every view below derives from. Caller releases
     // via Pins.releaseAll, as with every pin in this family.
     val base = Pins.pin(parallelize(batch))
+    // A doc with no shingles emits no band rows. The guard sits inside the
+    // generator's input: a filter on the `__sh` alias would be pushed below
+    // the projection and run the shingle kernel a second time.
     val bandKeys = Pins.pin(base
       .select(col(idCol), shingles(col(textCol)).as("__sh"))
-      .where(size(col("__sh")) > 0)
-      .select(col(idCol), posexplode(
-        graft.functions.MinHashBandKeys(col("__sh"), numHashes, bands))
+      .select(col(idCol), posexplode(when(size(col("__sh")) > 0,
+        graft.functions.MinHashBandKeys(col("__sh"), numHashes, bands)))
         .as(Seq("__band", "__bh"))))
 
     // (1) within-batch: any band collision decides; smaller id wins.
@@ -553,12 +556,31 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
     * Returns (id_a, id_b, jaccard_pct) with id_a < id_b, jaccard as an exact
-    * integer percent (engine-neutral).
+    * integer percent (engine-neutral). Ids must be unique integers (byte,
+    * short, int or long; the output keeps the input's id type).
     *
-    * Pipeline: shingle -> signature -> explode band keys -> self-equi-join on
-    * (band, bandhash) -> distinct candidate pairs -> verify exact Jaccard on
-    * the two shingle sets. The only shuffles are the band join and the
-    * candidate dedup; both are on compact keys.
+    * Pipeline, ONE shuffle: a single projection computes each kernel once
+    * per document — the sorted distinct shingles `sh` and the fused
+    * signature+banding keys `bk` — and posexplodes `bk` into one row per
+    * band; the rows shuffle once, on the bucket key (band, bh), into
+    * `defaultParallelism` partitions (an explicit count, so AQE cannot fold
+    * the verify work onto one task); each bucket's members are collected and
+    * walked by the native [[graft.functions.MinHashBucketPairs]] generator.
+    * A pair is emitted only in its LOWEST colliding band (its band keys
+    * differ in every band below this one), so every candidate pair appears
+    * exactly once with no pair `distinct`, and it is verified inline: exact
+    * `floor(inter*100/union) >= threshold%`, a merge of the two sorted
+    * shingle arrays. Documents with no shingles (empty, whitespace-only or
+    * null text) emit no band rows and never pair.
+    *
+    * The trade: each document's shingles travel once per band row (8x at
+    * the default banding) instead of once per verified candidate, and a
+    * bucket of k members holds k x (shingles + band keys) in one task — its
+    * output is already up to k(k-1)/2 pairs. On a 753-document corpus with
+    * a 100-copy cluster that is 4.5 MB of shuffle per call against 0.25 MB
+    * for the former join-then-dedup plan, which evaluated the shingle kernel
+    * several times per document, generated each pair once per colliding
+    * band, and verified every pair in one coalesced task.
     *
     * Default 8 bands x 8 rows targets true near-duplicates (collision
     * probability ~99% at j=0.9, ~3% at j=0.5): on a self-similar corpus wide
@@ -567,36 +589,26 @@ object Dedup {
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    val base = parallelize(df.select(col(idCol).as("id"), col(textCol).as("text")))
-    val withSh = base.select(col("id"), shingles(col("text")).as("sh"))
-      .where(size(col("sh")) > 0)
-    // fused native signature+banding: one codegen'd pass emits the `bands`
-    // band keys per doc (posexplode keeps it single-eval). The round-1
-    // two-step (explode numHashes sig rows -> groupBy collect_list) paid a
-    // full shuffle of numHashes x docs rows just to reassemble band keys.
-    // .distinct() is a semantic no-op ((id, band) is unique) that plants a
-    // shuffle Exchange below the self-join's two branches: Spark's
-    // ReuseExchange then computes the signature ONCE — without it each join
-    // side re-hashes the whole corpus (measured 1.5x slower at sf0.1)
-    val banded = withSh.select(col("id"),
-      posexplode(graft.functions.MinHashBandKeys(col("sh"), numHashes, bands))
-        .as(Seq("band", "bh")))
-      .distinct()
-    val a = banded.select(col("id").as("id_a"), col("band"), col("bh"))
-    val b = banded.select(col("id").as("id_b"), col("band"), col("bh"))
-    // dedup candidates on the compact (id_a, id_b) key, THEN attach the
-    // shingle arrays — shuffling array payloads through the distinct would
-    // dominate the job at scale
-    val cand = a.join(b, Seq("band", "bh")).where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-      .join(withSh.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(withSh.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-    // native one-pass verify (floor(inter*100/uni) >= intThreshold is
-    // equivalent to inter*100 >= uni*intThreshold for integer thresholds)
-    cand
-      .withColumn("jaccard_pct", graft.functions.JaccardPct(col("sh_a"), col("sh_b")))
-      .where(col("jaccard_pct") >= (threshold * 100).toInt)
-      .select("id_a", "id_b", "jaccard_pct")
+    val idType = df.select(col(idCol)).schema.head.dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"minhashLshPairs needs integer ids, got $idType")
+    val base = parallelize(df.select(col(idCol).cast("long").as("id"), col(textCol).as("text")))
+    // `sh` feeds two expressions of the next projection, so Catalyst keeps
+    // the shingle kernel in its own projection instead of inlining it twice
+    val keyed = base.select(col("id"), sort_array(shingles(col("text"))).as("sh"))
+      .select(col("id"), col("sh"),
+        graft.functions.MinHashBandKeys(col("sh"), numHashes, bands).as("bk"))
+    // the generator's input is an expression, not the `bk` alias: a plain
+    // explode of an alias makes Catalyst infer `size(bk) > 0` and push it
+    // below the projection, where it runs both kernels a second time
+    keyed.select(col("id"), col("sh"), col("bk"),
+        posexplode(when(size(col("sh")) > 0, col("bk"))).as(Seq("band", "bh")))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism, col("band"), col("bh"))
+      .groupBy(col("band"), col("bh"))
+      .agg(collect_list(struct(col("id"), col("sh"), col("bk"))).as("m"))
+      .select(graft.functions.MinHashBucketPairs(col("band"), col("m"), (threshold * 100).toInt))
+      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
+        col("jaccard_pct"))
   }
 
   /** 64-bit SimHash over word unigrams: sign of the per-bit sum of +-1 votes
@@ -607,10 +619,10 @@ object Dedup {
   def simhash(text: Column): Column =
     graft.functions.SimHash64(split(lower(trim(text)), "\\s+"))
 
-  /** SimHash near-dup pairs with Hamming distance <= maxDist, found by
-    * pigeonhole blocking: split the 64-bit hash into (maxDist+1) blocks —
-    * any pair within distance shares at least one exact block. Equality join
-    * on (blockIdx, blockValue), then exact bit_count verify. */
+  /** SimHash near-dup pairs with Hamming distance <= maxDist: one
+    * [[simhash]] per document, then [[hammingPairs]] — one shuffle on the
+    * pigeonhole block key, each pair emitted once in its lowest equal
+    * block. Ids must be unique longs. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame =
     hammingPairs(
@@ -618,15 +630,21 @@ object Dedup {
         .select(col("id"), simhash(col("text")).as("h")),
       maxDist)
 
-  /** Generic 64-bit Hamming near-dup pairs (r17): the pigeonhole block
-    * join on ANY 64-bit fingerprint — extracted from [[simhashPairs]] so
-    * perceptual image hashes ([[graft.ops.Multimodal.dhashImages]]) ride
-    * the same machinery. `withH` must carry `id` (long, unique) and `h`
-    * (the 64-bit fingerprint); emits (id_a, id_b, hamming) with
-    * id_a < id_b and hamming <= maxDist. Pigeonhole completeness: the
-    * hash splits into maxDist+1 blocks, so any pair within distance
-    * shares at least one exact block; equality join on (blockIdx, value),
-    * then exact bit_count verify — never all-pairs. */
+  /** Generic 64-bit Hamming near-dup pairs (r17) on ANY 64-bit fingerprint
+    * — [[simhashPairs]] and the perceptual image/audio/video hashes of
+    * [[graft.ops.Multimodal]] ride it. `withH` must carry `id` (long,
+    * unique) and `h` (the fingerprint; null never pairs); emits (id_a, id_b,
+    * hamming) with id_a < id_b and hamming <= maxDist.
+    *
+    * Pigeonhole completeness: the hash splits into maxDist+1 blocks, so any
+    * pair within distance shares at least one exact block. Each fingerprint
+    * emits one row per block, the rows shuffle ONCE on the bucket key
+    * (blockIdx, blockValue) into `defaultParallelism` partitions, and the
+    * native [[graft.functions.HammingBucketPairs]] generator walks each
+    * bucket: a pair is emitted only in its LOWEST equal block (every block
+    * below differs) and only when `bitCount(h_a ^ h_b) <= maxDist` — each
+    * pair once, no pair `distinct`, never all-pairs. The trade: a bucket of
+    * k members is k x (id, h) in one task, with up to k(k-1)/2 pairs out. */
   def hammingPairs(withH: DataFrame, maxDist: Int = 3): DataFrame = {
     require(maxDist >= 1 && maxDist <= 63,
       s"maxDist must be in [1, 63], got $maxDist") // 0 wraps the block mask
@@ -634,21 +652,18 @@ object Dedup {
     val bits = 64 / nBlocks
     // explode a constant sequence and derive the block value ABOVE the
     // Generate: the fingerprint is then evaluated once per input row, not
-    // once per block (same Catalyst-inlining trap as in minhashLshPairs)
-    val blocked = withH
+    // once per block. The null guard sits inside the generator's input; a
+    // filter on `h` would be pushed below — and re-run — a kernel projection.
+    withH
       .select(col("id"), col("h"),
-        explode(sequence(lit(0), lit(nBlocks - 1))).as("bi"))
-      .select(col("id"), col("h"),
-        struct(col("bi"),
-          call_function("shiftright", col("h"), col("bi") * bits)
-            .bitwiseAND(lit((1L << bits) - 1)).as("bv")).as("blk"))
-    val a = blocked.select(col("id").as("id_a"), col("h").as("h_a"), col("blk"))
-    val b = blocked.select(col("id").as("id_b"), col("h").as("h_b"), col("blk"))
-    a.join(b, Seq("blk")).where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "h_a", "h_b").distinct()
-      .withColumn("dist", bit_count(col("h_a").bitwiseXOR(col("h_b"))))
-      .where(col("dist") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("dist").cast("long").as("hamming"))
+        explode(when(col("h").isNotNull, sequence(lit(0), lit(nBlocks - 1)))).as("bi"))
+      .select(col("id"), col("h"), col("bi"),
+        call_function("shiftright", col("h"), col("bi") * bits)
+          .bitwiseAND(lit((1L << bits) - 1)).as("bv"))
+      .repartition(withH.sparkSession.sparkContext.defaultParallelism, col("bi"), col("bv"))
+      .groupBy(col("bi"), col("bv"))
+      .agg(collect_list(struct(col("id").cast("long"), col("h"))).as("m"))
+      .select(graft.functions.HammingBucketPairs(col("bi"), col("m"), bits, maxDist))
   }
 
   /** SemDedup-style SEMANTIC near-duplicate removal: drop documents whose
@@ -814,9 +829,13 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5): DataFrame = {
     val base = parallelize(df.select(col(idCol).as("id"), col(textCol).as("text")))
-    val withSh = base.select(col("id"), shingles(col("text"), n).as("sh"))
-      .where(size(col("sh")) > 0)
-    val inv = withSh.select(col("id"), size(col("sh")).as("sz"), explode(col("sh")).as("s"))
+    // explode_outer + a null check on the generated shingle: a doc with no
+    // shingles emits no rows, and no filter lands on the `sh` alias (one —
+    // written, or inferred from a plain explode — is pushed below the
+    // projection and re-runs the shingle kernel)
+    val inv = base.select(col("id"), shingles(col("text"), n).as("sh"))
+      .select(col("id"), size(col("sh")).as("sz"), explode_outer(col("sh")).as("s"))
+      .where(col("s").isNotNull)
     val withDf = inv.join(inv.groupBy("s").agg(count(lit(1)).as("df_")), Seq("s"))
     // rank shingles per doc rarest-first (global (df, s) order)
     val w = Window.partitionBy("id").orderBy(col("df_"), col("s"))

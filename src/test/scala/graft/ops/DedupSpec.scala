@@ -1,6 +1,9 @@
 package graft.ops
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -475,5 +478,208 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val loose = Dedup.incrementalWinnow(w2, b2, "doc_id", "text", minShared = 1000)
     assert(loose.select("doc_id").as[Long].collect().toSet == Set(10L, 11L, 12L))
     Pins.releaseAll()
+  }
+
+  // ---- single-shuffle near-dup pairs: exactness against brute force ----
+
+  /** Rows as (id_a, id_b, third), asserting the pair contract on the way:
+    * id_a < id_b and no pair emitted twice. */
+  private def pairRows(df: org.apache.spark.sql.DataFrame): Map[(Long, Long), Long] = {
+    val rows = df.collect().map(r => ((r.getLong(0), r.getLong(1)), r.getLong(2)))
+    assert(rows.forall { case ((a, b), _) => a < b }, "every pair has id_a < id_b")
+    assert(rows.map(_._1).distinct.length == rows.length, "no pair emitted twice")
+    rows.toMap
+  }
+
+  /** `rows` as a DataFrame over an RDD of `parts` partitions (an RDD scan,
+    * so no projection over it folds into a local relation at plan time). */
+  private def rddDocs(rows: Seq[(Long, String)], parts: Int) = {
+    import spark.implicits._
+    spark.sparkContext.parallelize(rows, parts).toDF("doc_id", "text")
+  }
+
+  /** MinHash fixture: a 64-copy hot bucket, one-token edits (collide in
+    * most bands), a family of mid-similarity variants (some collide only in
+    * the last band), short, empty, whitespace-only and null texts. */
+  private lazy val minhashCorpus: Seq[(Long, String)] = {
+    val rng = new scala.util.Random(1107)
+    val vocab = Vector.tabulate(40)(i => s"w$i")
+    def words(n: Int) = Seq.fill(n)(vocab(rng.nextInt(vocab.size)))
+    val hot = words(40).mkString(" ")
+    val edit = words(100)
+    val mid = words(40)
+    (0 until 64).map(i => (1000L + i) -> hot) ++
+      (0 until 8).map(i => (2000L + i) -> edit.updated(i * 11, "edited").mkString(" ")) ++
+      (0 until 70).map { i =>
+        val w = (0 until 1 + i % 3).foldLeft(mid)((ws, _) =>
+          ws.updated(rng.nextInt(ws.size), vocab(rng.nextInt(vocab.size))))
+        (3000L + i) -> w.mkString(" ")
+      } ++
+      (0 until 20).map(i => (4000L + i) -> words(5 + rng.nextInt(30)).mkString(" ")) ++
+      Seq(5000L -> "", 5001L -> "", 5002L -> "   ", 5003L -> " \t ", 5004L -> null,
+        5005L -> null, 5006L -> "one", 5007L -> "one", 5008L -> "one two")
+  }
+
+  test("minhashLshPairs: exactly the brute-force pair set, each pair once, in any partitioning") {
+    import spark.implicits._
+    val t = rddDocs(minhashCorpus, 2)
+    val keyed = t.select(col("doc_id"), Dedup.shingles(col("text")).as("sh"),
+        graft.functions.MinHashBandKeys(Dedup.shingles(col("text")), 64, 8).as("bk"))
+      .as[(Long, Option[Seq[String]], Option[Seq[Long]])].collect()
+      .collect { case (id, Some(sh), Some(bk)) if sh.nonEmpty => (id, sh.toSet, bk) }
+    // lowest colliding band of every colliding pair, and its exact percent
+    val colliding = for {
+      x <- keyed; y <- keyed if x._1 < y._1
+      low = x._3.indices.find(i => x._3(i) == y._3(i)) if low.isDefined
+    } yield ((x._1, y._1), (low.get, (x._2 & y._2).size * 100L / (x._2 | y._2).size))
+    val dp = spark.sparkContext.defaultParallelism
+    for (threshold <- Seq(0.5, 0.3); parts <- Seq(1, 3 * dp + 1)) {
+      val expected = colliding.collect {
+        case (p, (_, pct)) if pct >= (threshold * 100).toInt => p -> pct }.toMap
+      val out = Dedup.minhashLshPairs(rddDocs(minhashCorpus, parts), "doc_id", "text",
+        threshold = threshold)
+      assert(out.columns.toSeq == Seq("id_a", "id_b", "jaccard_pct"))
+      val got = pairRows(out)
+      assert(got == expected, s"t=$threshold parts=$parts: " +
+        s"missing=${(expected.keySet -- got.keySet).take(5)} " +
+        s"extra=${(got.keySet -- expected.keySet).take(5)}")
+    }
+    // the fixture exercises every shape it claims to
+    val lows = colliding.filter(_._2._2 >= 30).map(_._2._1)
+    assert(lows.count(_ == 7) > 0, "a verified pair colliding only in the last band")
+    assert(colliding.count { case ((a, b), _) => a >= 1000 && b < 1064 } == 64 * 63 / 2)
+    // int ids keep their type
+    val intIds = Dedup.minhashLshPairs(
+      docs(minhashCorpus.take(3): _*).select(col("doc_id").cast("int").as("doc_id"), col("text")),
+      "doc_id", "text")
+    assert(intIds.schema.map(_.dataType) == Seq(
+      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType,
+      org.apache.spark.sql.types.LongType))
+    assert(intIds.collect().map(r => (r.getInt(0), r.getInt(1))).toSet == Set((1000, 1001), (1000, 1002), (1001, 1002)))
+  }
+
+  test("hammingPairs: exactly the brute-force pairs at maxDist 1, 3 and 5, each pair once") {
+    import spark.implicits._
+    val rng = new scala.util.Random(77)
+    val dp = spark.sparkContext.defaultParallelism
+    for (maxDist <- Seq(1, 3, 5)) {
+      val bits = 64 / (maxDist + 1)
+      val seeds = Seq.fill(12)(rng.nextLong())
+      // one flipped bit in every block but the last: distance maxDist, and
+      // the last block is the pair's only equal one
+      val lastOnly = (0 until maxDist).map(b => 1L << (b * bits)).reduce(_ | _)
+      val rows: Seq[(Long, Option[Long])] =
+        (0 until 64).map(i => (100L + i) -> Some(seeds(0))) ++                // hot bucket
+        seeds.indices.map(i => (200L + i) -> Some(seeds(i) ^ lastOnly)) ++    // last block only
+        seeds.indices.map(i => (300L + i) -> Some(seeds(i) ^ 1L)) ++          // several blocks
+        seeds.indices.flatMap(i => (0 until 6).map { j =>                     // random flips
+          val flips = (0 until rng.nextInt(8)).map(_ => 1L << rng.nextInt(64)).fold(0L)(_ | _)
+          (1000L + i * 10 + j) -> Some(seeds(i) ^ flips)
+        }) ++
+        Seq(900L -> None, 901L -> None, 902L -> None)                         // null fingerprints
+      val live = rows.collect { case (id, Some(h)) => id -> h }
+      val expected = (for {
+        (a, ha) <- live; (b, hb) <- live
+        if a < b && java.lang.Long.bitCount(ha ^ hb) <= maxDist
+      } yield (a, b) -> java.lang.Long.bitCount(ha ^ hb).toLong).toMap
+      for (parts <- Seq(1, 3 * dp + 1)) {
+        val withH = spark.sparkContext.parallelize(rows, parts).toDF("id", "h")
+        val got = pairRows(Dedup.hammingPairs(withH, maxDist))
+        assert(got == expected, s"maxDist=$maxDist parts=$parts: " +
+          s"missing=${(expected.keySet -- got.keySet).take(5)} " +
+          s"extra=${(got.keySet -- expected.keySet).take(5)}")
+      }
+      assert(expected((100L, 200L)) == maxDist.toLong, "the last-block-only pair is found")
+      assert(expected((100L, 163L)) == 0L)
+    }
+  }
+
+  test("simhashPairs: exactly the brute-force pairs over empty, whitespace-only and null texts") {
+    import spark.implicits._
+    val rows = minhashCorpus.filter(_._1 >= 3000)
+    val hs = rddDocs(rows, 3).select(col("doc_id"), Dedup.simhash(col("text")))
+      .as[(Long, Option[Long])].collect().collect { case (id, Some(h)) => id -> h }
+    for (maxDist <- Seq(1, 3)) {
+      val expected = (for {
+        (a, ha) <- hs; (b, hb) <- hs
+        if a < b && java.lang.Long.bitCount(ha ^ hb) <= maxDist
+      } yield (a, b) -> java.lang.Long.bitCount(ha ^ hb).toLong).toMap
+      assert(pairRows(Dedup.simhashPairs(rddDocs(rows, 3), "doc_id", "text", maxDist)) == expected)
+      assert(expected.contains((5000L, 5001L)), "equal (empty) texts pair at distance 0")
+    }
+  }
+
+  // ---- plan shape: each native kernel once per input scan ----
+
+  private val nativeKernels: Seq[Class[_]] = Seq(classOf[graft.functions.WordShingles],
+    classOf[graft.functions.MinHashBandKeys], classOf[graft.functions.SimHash64])
+
+  private def planKids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case _ => p.children
+  }
+
+  private def kernelsAt(p: SparkPlan, k: Class[_]): Int =
+    p.expressions.map(_.collect { case e if k.isInstance(e) => e }.size).sum
+
+  /** The most evaluations of kernel `k` on one scan-to-root path. */
+  private def kernelsOnPath(p: SparkPlan, k: Class[_]): Int =
+    kernelsAt(p, k) + (planKids(p).map(kernelsOnPath(_, k)) :+ 0).max
+
+  private def kernelsIn(p: SparkPlan, k: Class[_]): Int =
+    kernelsAt(p, k) + planKids(p).map(kernelsIn(_, k)).sum
+
+  private def exchangesIn(p: SparkPlan): Int =
+    (p match { case _: Exchange => 1; case _ => 0 }) + planKids(p).map(exchangesIn).sum
+
+  /** Executed plans of every query `body` runs (pins included). */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.CopyOnWriteArrayList[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  test("plan shape: minhash and simhash pairs run one Exchange and each kernel once") {
+    val d = rddDocs(minhashCorpus, spark.sparkContext.defaultParallelism)
+    for ((name, pairs) <- Seq(
+        "minhashLshPairs" -> Dedup.minhashLshPairs(d, "doc_id", "text"),
+        "simhashPairs" -> Dedup.simhashPairs(d, "doc_id", "text"))) {
+      pairs.collect()
+      val plan = pairs.queryExecution.executedPlan
+      assert(exchangesIn(plan) == 1, s"$name: one shuffle\n$plan")
+      val used = nativeKernels.filter(kernelsIn(plan, _) > 0)
+      assert(used.nonEmpty)
+      used.foreach(k => assert(kernelsIn(plan, k) == 1, s"$name: ${k.getSimpleName} once\n$plan"))
+    }
+  }
+
+  test("plan shape: ngramJaccardPairs and the incremental band-key frame run each kernel once per scan") {
+    import graft.core.DimMapping
+    import graft.world.World
+    val d = rddDocs(minhashCorpus, spark.sparkContext.defaultParallelism)
+    val ngram = executedPlans(Dedup.ngramJaccardPairs(d, "doc_id", "text").collect())
+    val path = java.nio.file.Files.createTempDirectory("graft-mhplan").toString
+    val w = World(spark, path)("band64" -> DimMapping(0L, -1L, 1L << 59))
+    // a virgin store, then a replay against the store it created
+    val inc = executedPlans((1 to 2).foreach(_ =>
+      Dedup.incrementalMinHashLsh(w, d, "doc_id", "text").collect()))
+    Pins.releaseAll()
+    for ((name, plans) <- Seq("ngramJaccardPairs" -> ngram, "incrementalMinHashLsh" -> inc)) {
+      assert(plans.exists(p => kernelsIn(p, classOf[graft.functions.WordShingles]) > 0),
+        s"$name: no executed plan ran the shingle kernel")
+      for (p <- plans; k <- nativeKernels)
+        assert(kernelsOnPath(p, k) <= 1, s"$name: ${k.getSimpleName} twice on one path\n$p")
+    }
+    assert(inc.exists(p => kernelsIn(p, classOf[graft.functions.MinHashBandKeys]) == 1))
   }
 }
