@@ -3,9 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, RowOrdering}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, TypeUtils}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * k(k-1)/2 pair checks in one task; its output is already up to that many
   * pairs.
   *
-  * The walk is lazy (one pair row at a time), and member ids read as longs;
+  * The walk is lazy (one pair row at a time). A member id is the first
+  * struct field, of any orderable type, and the pair columns keep that type;
   * members with a null id never pair, matching the `id_a < id_b` predicate
   * of a join. Interpreted (CodegenFallback): one `eval` per bucket, the
   * per-pair work is the plain loops below.
@@ -33,20 +34,18 @@ object BucketPairs {
     Iterator.range(0, k).flatMap(i =>
       Iterator.range(i + 1, k).map(j => emit(i, j)).filter(_ != null))
 
-  /** Member structs with a non-null id, sorted by id. */
-  private[functions] def sortedMembers(arr: ArrayData, nFields: Int): Array[InternalRow] = {
-    val out = new Array[InternalRow](arr.numElements())
-    var n = 0
-    var i = 0
-    while (i < arr.numElements()) {
-      val r = arr.getStruct(i, nFields)
-      if (!r.isNullAt(0)) { out(n) = r; n += 1 }
-      i += 1
-    }
-    val live = java.util.Arrays.copyOf(out, n)
-    java.util.Arrays.sort(live, (a: InternalRow, b: InternalRow) =>
-      java.lang.Long.compare(a.getLong(0), b.getLong(0)))
-    live
+  /** The id type of `array<struct<id, ...>>` members (NullType otherwise). */
+  private[functions] def idType(members: Expression): DataType = members.dataType match {
+    case ArrayType(s: StructType, _) if s.nonEmpty => s.head.dataType
+    case _ => NullType
+  }
+
+  /** Member structs with a non-null id, and their ids, sorted by id. */
+  private[functions] def sortedMembers(arr: ArrayData, nFields: Int, idType: DataType,
+      ord: Ordering[Any]): (Array[Any], Array[InternalRow]) = {
+    val live = (0 until arr.numElements()).map(arr.getStruct(_, nFields))
+      .filterNot(_.isNullAt(0)).map(r => (r.get(0, idType), r)).sortBy(_._1)(ord)
+    (live.map(_._1).toArray, live.map(_._2).toArray)
   }
 
   /** |A ∩ B| of two ascending (binary order), duplicate-free string arrays:
@@ -62,25 +61,28 @@ object BucketPairs {
     inter
   }
 
-  private[functions] def schema(third: String): StructType = new StructType()
-    .add("id_a", LongType, nullable = false)
-    .add("id_b", LongType, nullable = false)
+  private[functions] def schema(idType: DataType, third: String): StructType = new StructType()
+    .add("id_a", idType, nullable = false)
+    .add("id_b", idType, nullable = false)
     .add(third, LongType, nullable = false)
 
+  /** `key` is an int and `members` an array of structs (id, fields...), the
+    * id of an orderable type. */
   private[functions] def check(name: String, key: Expression, members: Expression,
       fields: DataType*): TypeCheckResult = {
-    val want = ArrayType(StructType(fields.zipWithIndex.map { case (t, i) =>
+    val id = idType(members)
+    val want = ArrayType(StructType((id +: fields).zipWithIndex.map { case (t, i) =>
       StructField(s"f$i", t) }))
-    if (key.dataType == IntegerType &&
+    if (key.dataType == IntegerType && id != NullType && RowOrdering.isOrderable(id) &&
         DataType.equalsStructurally(members.dataType, want, ignoreNullability = true))
       TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(s"$name requires (int, ${want.simpleString}), " +
-      s"got (${key.dataType.simpleString}, ${members.dataType.simpleString})")
+    else TypeCheckResult.TypeCheckFailure(s"$name requires (int, ${want.simpleString}) " +
+      s"with an orderable id, got (${key.dataType.simpleString}, ${members.dataType.simpleString})")
   }
 }
 
 /** MinHash-LSH bucket pairs. `band` is the bucket's band index; `members`
-  * is array<struct<id: long, sh: array<string>, bk: array<long>>> — each
+  * is array<struct<id, sh: array<string>, bk: array<long>>> — each
   * member's shingles, sorted ascending in binary order (`sort_array`) and
   * distinct, and its full band-key array. A pair is emitted here only when
   * no band below `band` has equal keys for the two members, and only when
@@ -92,18 +94,19 @@ case class MinHashBucketPairs(band: Expression, members: Expression, thresholdPc
 
   override def children: Seq[Expression] = Seq(band, members)
 
-  override def elementSchema: StructType = BucketPairs.schema("jaccard_pct")
+  @transient private lazy val idType = BucketPairs.idType(members)
+  @transient private lazy val idOrd = TypeUtils.getInterpretedOrdering(idType)
+
+  override def elementSchema: StructType = BucketPairs.schema(idType, "jaccard_pct")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    BucketPairs.check(prettyName, band, members,
-      LongType, ArrayType(StringType), ArrayType(LongType))
+    BucketPairs.check(prettyName, band, members, ArrayType(StringType), ArrayType(LongType))
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val arr = members.eval(input).asInstanceOf[ArrayData]
     if (arr == null || arr.numElements() < 2) return Iterator.empty
     val b = band.eval(input).asInstanceOf[Int]
-    val ms = BucketPairs.sortedMembers(arr, 3)
-    val ids = ms.map(_.getLong(0))
+    val (ids, ms) = BucketPairs.sortedMembers(arr, 3, idType, idOrd)
     val keys = ms.map(_.getArray(2))
     // each member's shingles materialize once per bucket; the pair merges
     // below then allocate nothing
@@ -115,7 +118,7 @@ case class MinHashBucketPairs(band: Expression, members: Expression, thresholdPc
       var lower = false
       var c = 0
       while (!lower && c < b) { lower = keys(i).getLong(c) == keys(j).getLong(c); c += 1 }
-      if (lower || ids(i) == ids(j)) null
+      if (lower || idOrd.equiv(ids(i), ids(j))) null
       else {
         val inter = BucketPairs.sortedIntersection(sh(i), sh(j))
         val uni = sh(i).length + sh(j).length - inter
@@ -140,7 +143,7 @@ object MinHashBucketPairs {
 }
 
 /** Hamming pigeonhole bucket pairs. `block` is the bucket's block index;
-  * `members` is array<struct<id: long, h: long>>, h the 64-bit fingerprint
+  * `members` is array<struct<id, h: long>>, h the 64-bit fingerprint
   * split into `bits`-wide blocks. A pair is emitted here only when no block
   * below `block` is equal for the two members (`(h_a ^ h_b) >>> (c * bits)
   * & mask != 0` for every c < block), and only when `bitCount(h_a ^ h_b)
@@ -151,18 +154,20 @@ case class HammingBucketPairs(block: Expression, members: Expression, bits: Int,
 
   override def children: Seq[Expression] = Seq(block, members)
 
-  override def elementSchema: StructType = BucketPairs.schema("hamming")
+  @transient private lazy val idType = BucketPairs.idType(members)
+  @transient private lazy val idOrd = TypeUtils.getInterpretedOrdering(idType)
+
+  override def elementSchema: StructType = BucketPairs.schema(idType, "hamming")
 
   override def checkInputDataTypes(): TypeCheckResult =
-    BucketPairs.check(prettyName, block, members, LongType, LongType)
+    BucketPairs.check(prettyName, block, members, LongType)
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val arr = members.eval(input).asInstanceOf[ArrayData]
     if (arr == null || arr.numElements() < 2) return Iterator.empty
     val blk = block.eval(input).asInstanceOf[Int]
     val mask = (1L << bits) - 1
-    val ms = BucketPairs.sortedMembers(arr, 2)
-    val ids = ms.map(_.getLong(0))
+    val (ids, ms) = BucketPairs.sortedMembers(arr, 2, idType, idOrd)
     val hs = ms.map(_.getLong(1))
     BucketPairs.walk(ms.length) { (i, j) =>
       val x = hs(i) ^ hs(j)
@@ -170,7 +175,7 @@ case class HammingBucketPairs(block: Expression, members: Expression, bits: Int,
       var lower = false
       var c = 0
       while (!lower && c < blk) { lower = ((x >>> (c * bits)) & mask) == 0L; c += 1 }
-      if (lower || dist > maxDist || ids(i) == ids(j)) null
+      if (lower || dist > maxDist || idOrd.equiv(ids(i), ids(j))) null
       else InternalRow(ids(i), ids(j), dist.toLong)
     }
   }

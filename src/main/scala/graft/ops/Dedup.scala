@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
 /** Deduplication operators for LLM-data pipelines (north-star extension).
   *
@@ -556,8 +555,8 @@ object Dedup {
 
   /** MinHash+LSH near-duplicate pairs with exact-Jaccard verification.
     * Returns (id_a, id_b, jaccard_pct) with id_a < id_b, jaccard as an exact
-    * integer percent (engine-neutral). Ids must be unique integers (byte,
-    * short, int or long; the output keeps the input's id type).
+    * integer percent (engine-neutral). Ids must be unique; id_a and id_b
+    * keep the id column's type.
     *
     * Pipeline, ONE shuffle: a single projection computes each kernel once
     * per document — the sorted distinct shingles `sh` and the fused
@@ -589,10 +588,7 @@ object Dedup {
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, bands: Int = 8, threshold: Double = 0.5): DataFrame = {
-    val idType = df.select(col(idCol)).schema.head.dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"minhashLshPairs needs integer ids, got $idType")
-    val base = parallelize(df.select(col(idCol).cast("long").as("id"), col(textCol).as("text")))
+    val base = parallelize(df.select(col(idCol).as("id"), col(textCol).as("text")))
     // `sh` feeds two expressions of the next projection, so Catalyst keeps
     // the shingle kernel in its own projection instead of inlining it twice
     val keyed = base.select(col("id"), sort_array(shingles(col("text"))).as("sh"))
@@ -607,8 +603,6 @@ object Dedup {
       .groupBy(col("band"), col("bh"))
       .agg(collect_list(struct(col("id"), col("sh"), col("bk"))).as("m"))
       .select(graft.functions.MinHashBucketPairs(col("band"), col("m"), (threshold * 100).toInt))
-      .select(col("id_a").cast(idType).as("id_a"), col("id_b").cast(idType).as("id_b"),
-        col("jaccard_pct"))
   }
 
   /** 64-bit SimHash over word unigrams: sign of the per-bit sum of +-1 votes
@@ -622,7 +616,7 @@ object Dedup {
   /** SimHash near-dup pairs with Hamming distance <= maxDist: one
     * [[simhash]] per document, then [[hammingPairs]] — one shuffle on the
     * pigeonhole block key, each pair emitted once in its lowest equal
-    * block. Ids must be unique longs. */
+    * block. Ids must be unique; id_a and id_b keep the id column's type. */
   def simhashPairs(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3): DataFrame =
     hammingPairs(
@@ -632,9 +626,10 @@ object Dedup {
 
   /** Generic 64-bit Hamming near-dup pairs (r17) on ANY 64-bit fingerprint
     * — [[simhashPairs]] and the perceptual image/audio/video hashes of
-    * [[graft.ops.Multimodal]] ride it. `withH` must carry `id` (long,
-    * unique) and `h` (the fingerprint; null never pairs); emits (id_a, id_b,
-    * hamming) with id_a < id_b and hamming <= maxDist.
+    * [[graft.ops.Multimodal]] ride it. `withH` must carry `id` (unique,
+    * of any orderable type, which id_a and id_b keep) and `h` (the long
+    * fingerprint; null never pairs); emits (id_a, id_b, hamming) with
+    * id_a < id_b and hamming <= maxDist.
     *
     * Pigeonhole completeness: the hash splits into maxDist+1 blocks, so any
     * pair within distance shares at least one exact block. Each fingerprint
@@ -662,7 +657,7 @@ object Dedup {
           .bitwiseAND(lit((1L << bits) - 1)).as("bv"))
       .repartition(withH.sparkSession.sparkContext.defaultParallelism, col("bi"), col("bv"))
       .groupBy(col("bi"), col("bv"))
-      .agg(collect_list(struct(col("id").cast("long"), col("h"))).as("m"))
+      .agg(collect_list(struct(col("id"), col("h"))).as("m"))
       .select(graft.functions.HammingBucketPairs(col("bi"), col("m"), bits, maxDist))
   }
 

@@ -548,14 +548,17 @@ class DedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val lows = colliding.filter(_._2._2 >= 30).map(_._2._1)
     assert(lows.count(_ == 7) > 0, "a verified pair colliding only in the last band")
     assert(colliding.count { case ((a, b), _) => a >= 1000 && b < 1064 } == 64 * 63 / 2)
-    // int ids keep their type
-    val intIds = Dedup.minhashLshPairs(
-      docs(minhashCorpus.take(3): _*).select(col("doc_id").cast("int").as("doc_id"), col("text")),
-      "doc_id", "text")
-    assert(intIds.schema.map(_.dataType) == Seq(
-      org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.IntegerType,
-      org.apache.spark.sql.types.LongType))
-    assert(intIds.collect().map(r => (r.getInt(0), r.getInt(1))).toSet == Set((1000, 1001), (1000, 1002), (1001, 1002)))
+    // int and string ids keep their type, in both operators
+    val three = docs(minhashCorpus.take(3): _*)
+    for (idType <- Seq("int", "string")) {
+      val typed = three.select(col("doc_id").cast(idType).as("doc_id"), col("text"))
+      for (out <- Seq(Dedup.minhashLshPairs(typed, "doc_id", "text"),
+          Dedup.simhashPairs(typed, "doc_id", "text"))) {
+        assert(out.schema.map(_.dataType.simpleString) == Seq(idType, idType, "bigint"))
+        assert(out.collect().map(r => (r.get(0).toString, r.get(1).toString)).toSet ==
+          Set(("1000", "1001"), ("1000", "1002"), ("1001", "1002")))
+      }
+    }
   }
 
   test("hammingPairs: exactly the brute-force pairs at maxDist 1, 3 and 5, each pair once") {
