@@ -26,7 +26,7 @@ import org.apache.spark.sql.sources.{And, EqualNullSafe, EqualTo, Filter,
   *     ~1.2 KB/1k-distinct-values) and run through a parallel collection,
   *     the same cost class as the pushed-top-N footer walk.
   *   - row-group level (executors, for free): the residual filters already
-  *     ride to [[GraftPartitionReader]] as parquet `FilterCompat`
+  *     ride to [[GraftColumnarPartitionReader]] as block-level parquet
   *     predicates, and parquet-mr's row-group filter consults the same
   *     blooms (stats -> dictionary -> bloom) before decoding any page.
   *

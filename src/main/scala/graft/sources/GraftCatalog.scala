@@ -49,7 +49,7 @@ class GraftCatalog extends TableCatalog
   // (CURRENT_DEFAULT fills omitted INSERT columns — analyzer-side, no
   // connector work; EXISTS_DEFAULT is what rows written BEFORE the column
   // existed must read back as — served by the scan, see
-  // GraftPartitionReader's absent-column fill).
+  // GraftColumnarPartitionReader's absent-column fill).
   // ANSI CONSTRAINT surface (r14): `ALTER TABLE … ADD CONSTRAINT c CHECK
   // (…)` routes to the engine's OWN check machinery (GraftChecks — the
   // write-path gate every connector write already runs, with existing-data

@@ -7,53 +7,51 @@ import org.apache.hadoop.mapreduce.{JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader
+import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector,
+  OnHeapColumnVector}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** VECTORIZED read path for the graft connector (r17, guide §1.2 per-task
-  * work): the original `GraftPartitionReader` materializes every row
-  * through parquet-hadoop's Group API — a boxed object per value, a
-  * field-name→index STRING lookup per field per row, a `DataType` pattern
-  * match per field per row — which measured ~10× the task time of Spark's
-  * own parquet scan on identical bytes. This path reads through Spark's
-  * `VectorizedParquetRecordReader` (the same columnar decoder vanilla
-  * parquet scans use) and serves `ColumnarBatch`es straight to the exec
-  * layer, with whole-stage codegen consuming vectors instead of
-  * `GenericInternalRow`s.
+/** The connector's one parquet decode path (guide §1.2 per-task work):
+  * every graft scan — batch, streaming, change feed, row-level DML — reads
+  * its chunk files through Spark's `VectorizedParquetRecordReader` (the
+  * columnar decoder vanilla parquet scans use) and serves `ColumnarBatch`es
+  * straight to the exec layer, where whole-stage codegen consumes vectors.
   *
-  * Scope (decided SCAN-UNIFORMLY on the driver and stamped into every
-  * partition, because Spark forbids mixing row and columnar partitions in
-  * one scan): data reads with no `_pos` row-address column (ordinal
-  * bookkeeping stays on the row reader) and only types the repo's worlds
-  * actually store (atomics + arrays of atomics). Merge-on-read deletion
-  * vectors ARE served (r18): batches decode vectorized and the sorted
-  * deleted ordinals are applied as a surviving-row index view over the
-  * batch ([[GraftMappedColumnVector]]) — no copy, one int indirection per
-  * access; block-level predicates are dropped for dv'd files exactly like
-  * the row path so physical ordinals stay aligned with the vector.
-  * Everything the row reader resolves PER FILE —
+  * Data columns decode as atomics or arrays of atomics, what worlds store
+  * ([[GraftColumnar.requireSupported]]). Everything resolved PER FILE —
   * rename aliases, schema-evolution null columns, ADD COLUMN existence
   * defaults, INT32→BIGINT widened files (the vectorized reader widens
-  * natively since Spark 4.0) — is resolved identically here: present data
-  * fields are requested under their in-file name at the required type;
-  * constants (bucket values, `_cell`, `_file`, defaults, missing-column
-  * nulls) ride `initBatch`'s partition-value vectors; a final wrapper
-  * batch reorders the vectors to the required column order.
+  * natively since Spark 4.0), legacy INT96 timestamps — is resolved here:
+  * present data fields are requested under their in-file name at the
+  * required type; per-file constants (bucket values, `_cell`, `_file`, the
+  * change feed's `_change_type`, defaults, missing-column nulls) ride
+  * `initBatch`'s partition-value vectors; a final wrapper batch reorders
+  * the vectors to the required column order.
   *
-  * Residual filters become block-level parquet predicates exactly as on
-  * the row path (row-group skip by stats; Spark re-checks residuals above
-  * the scan, so the predicate only ever has to keep a superset). Record-
-  * and page-level parquet filtering are explicitly disabled — batch
-  * semantics want whole row groups, and the skipping that matters at
-  * 100 TB (files via blooms/zone maps, row groups via stats) happens
-  * before any page is read.
+  * `_pos`, the row address, is one `LongType` vector per batch holding the
+  * physical ordinal of each served row. Merge-on-read deletion vectors are
+  * applied as a surviving-row index view over each batch
+  * ([[GraftMappedColumnVector]]) — no copy, one int indirection per access;
+  * `_pos` is filled from the same survivor mapping. A file with no required
+  * data column (bucket-only and count-only projections, `_file`/`_pos`
+  * addresses, files older than every projected column) opens no parquet
+  * reader: its batches are constant vectors sized from the footer row count.
+  *
+  * Residual filters become block-level parquet predicates (row-group skip
+  * by stats; Spark re-checks residuals above the scan, so the predicate only
+  * ever has to keep a superset) — except on a file with a deletion vector or
+  * a read that requires `_pos`: a skipped row group would shift every
+  * physical ordinal after it. Record- and page-level parquet filtering are
+  * disabled — batch semantics want whole row groups, and the skipping that
+  * matters at 100 TB (files via blooms/zone maps, row groups via stats)
+  * happens before any page is read.
   *
   * Per-file work is the footer open and the decode only. The Hadoop conf is
   * the session's, shipped once per scan by [[GraftReaderFactory]]; the
@@ -62,32 +60,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * default Hadoop XML is parsed per file.
   */
 object GraftColumnar {
-  /** Session escape hatch, mirroring Spark's own vectorized-reader flag. */
-  def enabled: Boolean =
-    org.apache.spark.sql.SparkSession.active.conf
-      .get("spark.sql.parquet.enableVectorizedReader", "true") != "false"
-
   private def atomicOk(dt: DataType): Boolean = dt match {
     case LongType | IntegerType | DoubleType | FloatType | BooleanType |
          StringType | BinaryType | TimestampType => true
     case _ => false
   }
 
-  /** Can every required column be served from vectors? Bucket/_cell/_file
-    * columns are per-partition constants (always fine); `_pos` needs the
-    * row reader's ordinal cursor; data columns must be atomics or arrays
-    * of atomics (what worlds store — see GraftPartitionReader's matrix). */
-  def supportedSchema(required: StructType): Boolean =
-    required.fields.forall { f =>
-      if (GraftDataSource.isBucket(f.name)) true
-      else if (f.name == GraftDataSource.CellColumn ||
-        f.name == GraftDataSource.FileColumn) true
-      else if (f.name == GraftDataSource.PosColumn) false
-      else f.dataType match {
-        case ArrayType(et, _) => atomicOk(et)
-        case dt               => atomicOk(dt)
-      }
+  /** Refuses a data column a file stores under a type outside atomics and
+    * arrays of atomics. Checked per file, for stored columns only: a column
+    * a file lacks reads as its existence default or NULL, whatever its type. */
+  def requireSupported(f: StructField): Unit = {
+    val ok = f.dataType match {
+      case ArrayType(et, _) => atomicOk(et)
+      case dt               => atomicOk(dt)
     }
+    if (!ok) throw new UnsupportedOperationException(
+      s"graft source: unsupported type ${f.dataType} for column ${f.name}")
+  }
 }
 
 class GraftColumnarPartitionReader(p: GraftFileSpec,
@@ -99,6 +88,7 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends GraftFileReader[ColumnarBatch] {
+  import GraftColumnarPartitionReader.{Capacity, Const, Data, Pos, Source}
 
   private var reader: VectorizedParquetRecordReader = _
   private var out: ColumnarBatch = _
@@ -112,13 +102,13 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
   // pushed when a dv is present, so row groups are never skipped)
   private var dv: Array[Long] = Array.emptyLongArray
   private var dvIdx = 0
+  // physical ordinal of the next row the file yields
   private var baseOrdinal = 0L
-  private val mapping = new Array[Int](GraftColumnarPartitionReader.Capacity)
-  // const-only projection (no required data column present in THIS file —
-  // pre-ADD-COLUMN files under schema evolution, or bucket/_cell-only
-  // reads): batches are synthesized from constant vectors, no parquet
-  // reader at all (the r17 path handed VectorizedParquetRecordReader an
-  // empty requested schema and leaned on undocumented behavior)
+  private val mapping = new Array[Int](Capacity)
+  // the `_pos` vector, refilled per batch (null when `_pos` is not required)
+  private var pos: OnHeapColumnVector = _
+  // rows left to serve when no required data column is in this file:
+  // batches are constant vectors, no parquet reader at all (−1 = reader)
   private var constOnlyRemaining = -1L
 
   locally {
@@ -134,64 +124,68 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
       dv = GraftDv.read(dvP.getFileSystem(shared), dvP)
     }
 
-    def fieldInFile(name: String): Option[String] =
-      GraftDataSource.resolveInFile(fileSchema, name, aliases)
-
-    // split the required fields: data columns present in this file (read
-    // through the vectorized reader under their in-file name at the
-    // required type) vs per-partition constants (buckets, _cell, _file,
-    // existence defaults, missing-column nulls)
-    final case class Const(dt: DataType, value: Any)
-    val resolved: Array[Either[Const, String]] = required.fields.map { f =>
+    val resolved: Array[Source] = required.fields.map { f =>
       if (GraftDataSource.isBucket(f.name))
-        Left(Const(f.dataType, p.buckets.get(f.name).map { v =>
+        // a bucket the path does not bind (file written under an older grid
+        // geometry, read through a post-regrid schema) is NULL
+        Const(p.buckets.get(f.name).map { v =>
           f.dataType match {
             case IntegerType => v.toInt: Any
             case _           => v: Any
           }
-        }.orNull))
+        }.orNull)
       else if (f.name == GraftDataSource.CellColumn)
-        Left(Const(f.dataType,
-          UTF8String.fromString(GraftDataSource.cellString(p.buckets))))
+        Const(UTF8String.fromString(GraftDataSource.cellString(p.buckets)))
       else if (f.name == GraftDataSource.FileColumn)
-        Left(Const(f.dataType, UTF8String.fromString(p.file)))
-      else fieldInFile(f.name) match {
-        case Some(inFileName) => Right(inFileName)
+        Const(UTF8String.fromString(p.file))
+      else if (f.name == GraftDataSource.PosColumn) Pos
+      // the CDC tag is a per-file constant ONLY on change-feed reads: a
+      // table whose own data carries a _change_type column reads it as data
+      // everywhere else (follow mode refuses such tables)
+      else if (f.name == GraftDataSource.ChangeColumn && p.changeTag != null)
+        Const(UTF8String.fromString(p.changeTag))
+      else GraftDataSource.resolveInFile(fileSchema, f.name, aliases) match {
+        case Some(inFileName) =>
+          GraftColumnar.requireSupported(f)
+          Data(inFileName)
         case None if f.metadata.contains("EXISTS_DEFAULT") =>
-          Left(Const(f.dataType,
-            org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-              .getExistenceDefaultValue(f)))
-        case None => Left(Const(f.dataType, null))
+          // column added with a DEFAULT after this file was written
+          Const(org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
+            .getExistenceDefaultValue(f))
+        case None => Const(null)
       }
     }
-    val dataIdx = resolved.zipWithIndex.collect { case (Right(_), i) => i }
-    val constIdx = resolved.zipWithIndex.collect { case (Left(_), i) => i }
-    val requestedSchema = StructType(dataIdx.map { i =>
-      StructField(resolved(i).toOption.get, required.fields(i).dataType,
-        nullable = true)
+    // (required index, in-file name) / (required index, value)
+    val data = resolved.zipWithIndex.collect { case (Data(n), i) => (i, n) }
+    val consts = resolved.zipWithIndex.collect { case (Const(v), i) => (i, v) }
+    if (resolved.contains(Pos)) pos = new OnHeapColumnVector(Capacity, LongType)
+    val requestedSchema = StructType(data.map { case (i, n) =>
+      StructField(n, required.fields(i).dataType, nullable = true)
     })
-    val constSchema = StructType(constIdx.map { i =>
+    val constSchema = StructType(consts.map { case (i, _) =>
       StructField(required.fields(i).name, required.fields(i).dataType,
         nullable = true)
     })
-    val constRow: InternalRow = new GenericInternalRow(
-      constIdx.map(i => resolved(i).swap.toOption.get.value: Any))
-
-    if (dataIdx.isEmpty) {
-      // every required column is a per-partition constant for this file:
-      // serve (rowCount - |dv|) rows of constants in capacity-sized batches
-      constOnlyRemaining = rowCount - dv.length
-      val cols: Array[ColumnVector] = required.fields.indices.map { i =>
-        val c = new org.apache.spark.sql.execution.vectorized
-          .ConstantColumnVector(GraftColumnarPartitionReader.Capacity,
-            required.fields(i).dataType)
-        // dataIdx is empty, so constIdx covers every required index in
-        // order: position in constRow == required position
-        org.apache.spark.sql.execution.vectorized.ColumnVectorUtils
-          .populate(c, constRow, i)
-        c: ColumnVector
+    val constRow: InternalRow = new GenericInternalRow(consts.map(_._2))
+    // the served batch's columns in required order, given the vector of the
+    // k-th data column and of the k-th constant
+    def inRequiredOrder(dataCol: Int => ColumnVector,
+        constCol: Int => ColumnVector): Array[ColumnVector] = {
+      val dataPos = data.map(_._1).zipWithIndex.toMap
+      val constPos = consts.map(_._1).zipWithIndex.toMap
+      required.fields.indices.map { i =>
+        dataPos.get(i).map(dataCol).orElse(constPos.get(i).map(constCol))
+          .getOrElse(pos): ColumnVector
       }.toArray
-      out = new ColumnarBatch(cols)
+    }
+
+    if (data.isEmpty) {
+      constOnlyRemaining = rowCount - dv.length
+      out = new ColumnarBatch(inRequiredOrder(_ => null, { k =>
+        val c = new ConstantColumnVector(Capacity, constSchema(k).dataType)
+        ColumnVectorUtils.populate(c, constRow, k)
+        c
+      }))
       current = out
     } else {
 
@@ -214,11 +208,10 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
     conf.set(ParquetInputFormat.COLUMN_INDEX_FILTERING_ENABLED, "false")
     conf.set(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, "false")
     val types = required.fields.map(f => f.name -> f.dataType).toMap
-    // a dv'd file takes NO block-level predicate: a stats row-group skip
-    // would silently desynchronize physical ordinals from the vector (the
-    // same rule the row reader applies via needsOrdinals)
+    // no block-level predicate when physical ordinals matter: a stats
+    // row-group skip would desynchronize them from the vector
     val preds =
-      if (dv.nonEmpty) Nil
+      if (dv.nonEmpty || pos != null) Nil
       else residual.toSeq
         .filter(_.references.forall(r => fileSchema.containsField(r) &&
           GraftDataSource.parquetPredicateCompatible(fileSchema, r, types.get(r))))
@@ -229,7 +222,7 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
 
     reader = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC",
-      /* useOffHeap = */ false, GraftColumnarPartitionReader.Capacity)
+      /* useOffHeap = */ false, Capacity)
     val split = new FileSplit(filePath, 0, fileLen, Array.empty[String])
     val ctx = new TaskAttemptContextImpl(conf,
       new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0))
@@ -243,37 +236,42 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
         if (footerOpt.isDefined) Some(inFile) else None, None, footerOpt)
       reader.initBatch(constSchema, constRow)
       val rb = reader.resultBatch()
-      // reorder to the required column order: data columns come first in
-      // requested order, then the constant columns initBatch appended
-      val dataPos = dataIdx.zipWithIndex.toMap
-      val constPos = constIdx.zipWithIndex.toMap
-      val cols: Array[ColumnVector] = required.fields.indices.map { i =>
-        dataPos.get(i) match {
-          case Some(dp) => rb.column(dp)
-          case None     => rb.column(requestedSchema.length + constPos(i))
-        }
-      }.toArray
+      // data columns come first in requested order, then the constant
+      // columns initBatch appended
+      val cols = inRequiredOrder(rb.column, k => rb.column(data.length + k))
       out = new ColumnarBatch(cols)
       if (dv.nonEmpty)
-        mappedOut = new ColumnarBatch(
-          cols.map(c => new GraftMappedColumnVector(c, mapping): ColumnVector))
+        mappedOut = new ColumnarBatch(cols.map(c =>
+          if (c eq pos) c else new GraftMappedColumnVector(c, mapping)))
       ok = true
-    } finally if (!ok) reader.close()
+    } finally if (!ok) close()
     }
   }
 
   override def next(): Boolean = {
     if (limit >= 0 && emitted >= limit) return false
     if (constOnlyRemaining >= 0L) {
-      if (constOnlyRemaining <= 0L) return false
-      var n = math.min(constOnlyRemaining,
-        GraftColumnarPartitionReader.Capacity.toLong).toInt
+      var n = math.min(constOnlyRemaining, Capacity.toLong).toInt
       if (limit >= 0 && emitted + n > limit)
         n = (limit - emitted).toInt
+      if (n <= 0) return false
       constOnlyRemaining -= n
+      if (pos != null) {
+        // walk the ordinals, skipping the deleted ones
+        var i = 0
+        while (i < n) {
+          while (dvIdx < dv.length && dv(dvIdx) == baseOrdinal) {
+            dvIdx += 1
+            baseOrdinal += 1
+          }
+          pos.putLong(i, baseOrdinal)
+          baseOrdinal += 1
+          i += 1
+        }
+      }
       out.setNumRows(n)
       emitted += n
-      return n > 0
+      return true
     }
     // dv application: batches stream in physical-ordinal order; a batch
     // containing deleted ordinals is served through the survivor index view
@@ -282,10 +280,12 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
     var live = 0
     var mapped = false
     var more = true
+    var batchBase = 0L
     while (live == 0 && more) {
       if (!reader.nextBatch()) more = false
       else {
         val n = reader.resultBatch().numRows()
+        batchBase = baseOrdinal
         if (dvIdx >= dv.length || dv(dvIdx) >= baseOrdinal + n) {
           live = n
           mapped = false
@@ -302,11 +302,17 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
       }
     }
     if (live == 0) return false
-    // pushed limit counts LIVE rows (like the row reader); truncate the
-    // final batch (mapping/vectors are positional from row 0, so keeping
-    // the first k rows is exact)
+    // a pushed limit counts LIVE rows; truncate the final batch (mapping and
+    // vectors are positional from row 0, so keeping the first k is exact)
     if (limit >= 0 && emitted + live > limit)
       live = (limit - emitted).toInt
+    if (pos != null) {
+      var i = 0
+      while (i < live) {
+        pos.putLong(i, batchBase + (if (mapped) mapping(i) else i))
+        i += 1
+      }
+    }
     current = if (mapped) mappedOut else out
     current.setNumRows(live)
     emitted += live
@@ -315,12 +321,21 @@ class GraftColumnarPartitionReader(p: GraftFileSpec,
 
   override def get(): ColumnarBatch = current
 
-  override def close(): Unit = if (reader != null) reader.close()
+  override def close(): Unit = {
+    if (reader != null) reader.close()
+    if (pos != null) pos.close()
+  }
 }
 
 object GraftColumnarPartitionReader {
   /** Rows per ColumnarBatch — matches Spark's vectorized-reader default. */
   val Capacity = 4096
+
+  /** Where one required column's values come from in one file. */
+  private sealed trait Source
+  private final case class Const(value: Any) extends Source
+  private final case class Data(inFile: String) extends Source
+  private case object Pos extends Source
 }
 
 /** Read-only view of `base` through a shared survivor index map:
@@ -329,7 +344,7 @@ object GraftColumnarPartitionReader {
   * decode stays vectorized and surviving rows pay one int indirection per
   * access. The map array is OWNED by the partition reader and rewritten per
   * batch; only indices below the served batch's numRows are valid. Struct /
-  * nested-map children never occur here (GraftColumnar.supportedSchema
+  * nested-map children never occur here (GraftColumnar.requireSupported
   * admits atomics and arrays of atomics only); getArray delegates by mapped
   * ordinal, so element data rides the base vector's own child. */
 private[sources] final class GraftMappedColumnVector(

@@ -2,13 +2,7 @@ package graft.sources
 
 import java.util.regex.Pattern
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.ReadSupport
-import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -1255,94 +1249,95 @@ class GraftAggReaderFactory(aggs: Seq[PushedAgg], dataSchema: StructType,
             else Some(acc.map(narrow(c, _)).orNull)
           }
         }
-        def narrow(c: String, v: Long): Any =
-          dataSchema.fields.find(_.name == c).map(_.dataType) match {
-            case Some(IntegerType) => v.toInt
-            case Some(ShortType)   => v.toShort
-            case Some(ByteType)    => v.toByte
-            case _                 => v
-          }
 
         val fromMeta = aggs.map(fromFooter)
         if (fromMeta.forall(_.isDefined)) fromMeta.map(_.get).toArray
         else scanFile()
       }
 
-      /** Stats-less fallback: one pass over this file's needed data columns. */
+      /** Stats-less fallback: one columnar pass over this file's needed data
+        * columns. */
       private def scanFile(): Array[Any] = {
         val needed = aggs.collect {
           case PCount(c) if !GraftDataSource.isBucket(c) => c
           case PMin(c) if !GraftDataSource.isBucket(c)   => c
           case PMax(c) if !GraftDataSource.isBucket(c)   => c
           case PSum(c) if !GraftDataSource.isBucket(c)   => c
-        }.distinct.filter(dataSchema.fieldNames.contains)
-        val pfr = GraftHadoop.openFooter(new Path(p.file), hadoopConf.value)
-        val fileSchema = pfr.getFooter.getFileMetaData.getSchema
-        val rowCount = pfr.getRecordCount
-        pfr.close()
-        // (current name, name in THIS file) pairs — pre-rename files store
-        // the column under an alias; stats accumulate under the current name
-        val present = needed.flatMap(c => GraftDataSource
-          .resolveInFile(fileSchema, c, aliases).map(c -> _))
-        val nonNull = scala.collection.mutable.Map[String, Long]()
-          .withDefaultValue(0L)
-        val mins = scala.collection.mutable.Map[String, Long]()
-        val maxs = scala.collection.mutable.Map[String, Long]()
-        val sums = scala.collection.mutable.Map[String, Long]()
-          .withDefaultValue(0L)
-        if (present.nonEmpty) {
-          val projection = new MessageType("graft_agg_projection",
-            present.map { case (_, fc) =>
-              fileSchema.getFields.get(fileSchema.getFieldIndex(fc)) }: _*)
-          val conf = new Configuration(hadoopConf.value)
-          conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-          val reader = ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-            .withConf(conf).build()
-          try {
-            var g = reader.read()
-            while (g != null) {
-              present.foreach { case (c, fc) =>
-                val idx = g.getType.getFieldIndex(fc)
-                if (g.getFieldRepetitionCount(idx) > 0) {
-                  nonNull(c) += 1L
-                  val v = g.getType.getType(idx).asPrimitiveType()
-                    .getPrimitiveTypeName match {
-                    case org.apache.parquet.schema.PrimitiveType
-                        .PrimitiveTypeName.INT64 => g.getLong(idx, 0)
-                    case _ => g.getInteger(idx, 0).toLong
+        }.distinct.filter(dataSchema.fieldNames.contains).toIndexedSeq
+        // MIN/MAX/SUM columns are integral (pushAggregation admits no other);
+        // a COUNT-only column needs just its nulls
+        val integral = needed.map(c => dataSchema(c).dataType match {
+          case LongType | IntegerType | ShortType | ByteType => true
+          case _ => false
+        })
+        val nonNull = new Array[Long](needed.length)
+        val mins = Array.fill(needed.length)(Long.MaxValue)
+        val maxs = Array.fill(needed.length)(Long.MinValue)
+        val sums = new Array[Long](needed.length)
+        var rowCount = 0L
+        // pre-rename files store a column under an alias; a column the file
+        // lacks reads as NULL
+        val reader = new GraftColumnarPartitionReader(
+          GraftFileSpec(p.file, p.buckets), -1L,
+          StructType(needed.map(dataSchema(_))), hadoopConf.value,
+          aliases = aliases)
+        try while (reader.next()) {
+          val batch = reader.get()
+          val n = batch.numRows()
+          rowCount += n
+          var j = 0
+          while (j < needed.length) {
+            val col = batch.column(j)
+            var i = 0
+            while (i < n) {
+              if (!col.isNullAt(i)) {
+                nonNull(j) += 1L
+                if (integral(j)) {
+                  val v = col.dataType match {
+                    case LongType    => col.getLong(i)
+                    case IntegerType => col.getInt(i).toLong
+                    case ShortType   => col.getShort(i).toLong
+                    case _           => col.getByte(i).toLong
                   }
-                  mins.updateWith(c)(o => Some(o.fold(v)(math.min(_, v))))
-                  maxs.updateWith(c)(o => Some(o.fold(v)(math.max(_, v))))
-                  sums(c) += v
+                  mins(j) = math.min(mins(j), v)
+                  maxs(j) = math.max(maxs(j), v)
+                  sums(j) += v
                 }
               }
-              g = reader.read()
+              i += 1
             }
-          } finally reader.close()
-        }
-        def narrow(c: String, v: Long): Any =
-          dataSchema.fields.find(_.name == c).map(_.dataType) match {
-            case Some(IntegerType) => v.toInt
-            case Some(ShortType)   => v.toShort
-            case Some(ByteType)    => v.toByte
-            case _                 => v
+            j += 1
           }
+        } finally reader.close()
+        // a statistic of column c; NULL when c holds no value in this file
+        def stat(c: String)(f: Int => Any): Any = {
+          val j = needed.indexOf(c)
+          if (j < 0 || nonNull(j) == 0L) null else f(j)
+        }
         aggs.map {
           case PCountStar => rowCount: Any
           case PCount(c) =>
-            if (GraftDataSource.isBucket(c)) rowCount else nonNull(c)
+            if (GraftDataSource.isBucket(c)) rowCount
+            else { val j = needed.indexOf(c); if (j < 0) 0L else nonNull(j) }
           case PMin(c) =>
             if (GraftDataSource.isBucket(c)) p.buckets(c)
-            else mins.get(c).map(narrow(c, _)).orNull
+            else stat(c)(j => narrow(c, mins(j)))
           case PMax(c) =>
             if (GraftDataSource.isBucket(c)) p.buckets(c)
-            else maxs.get(c).map(narrow(c, _)).orNull
+            else stat(c)(j => narrow(c, maxs(j)))
           case PSum(c) =>
             if (GraftDataSource.isBucket(c)) p.buckets(c) * rowCount
-            else if (nonNull(c) == 0L) null  // SUM over no values is NULL
-            else sums(c): Any
+            else stat(c)(sums(_)) // SUM over no values is NULL
         }.toArray
       }
+
+      private def narrow(c: String, v: Long): Any =
+        dataSchema.fields.find(_.name == c).map(_.dataType) match {
+          case Some(IntegerType) => v.toInt
+          case Some(ShortType)   => v.toShort
+          case Some(ByteType)    => v.toByte
+          case _                 => v
+        }
 
       override def next(): Boolean =
         if (nextFile >= files.length) false
@@ -1363,23 +1358,17 @@ final case class GraftFileSpec(file: String, buckets: Map[String, Long],
     // per-file constant (null = not a change-feed read)
     changeTag: String = null)
 
-/** One split: the chunk files one task reads, in order.
-  * `keyVals` are the files' bucket values projected to the scan's reported
-  * partitioning keys (canonical c0..cN order) — the `partitionKey` contract
+/** One split: the chunk files one task reads, in order, through the
+  * columnar reader ([[GraftColumnarPartitionReader]]) — batch, streaming and
+  * change-feed scans alike, whatever the projection. `keyVals` are the
+  * files' bucket values projected to the scan's reported partitioning keys
+  * (canonical c0..cN order) — the `partitionKey` contract
   * that lets Spark group chunk files into key-aligned partitions for
   * storage-partitioned joins. Empty when the scan reports no partitioning
   * (bucket columns pruned from the output); a keyed split holds one file.
   * A pushed `limit` bounds the rows of the whole split. */
 final case class GraftInputPartition(files: Array[GraftFileSpec],
-    rowCountOnly: Boolean, limit: Int = -1, keyVals: Array[Long] = Array.empty,
-    // vectorized read (r17): decided SCAN-UNIFORMLY by planInputPartitions
-    // (Spark forbids mixing row and columnar partitions in one scan) —
-    // true when the required schema is vector-servable
-    // (GraftColumnar.supportedSchema). Deletion vectors are served
-    // columnar too (r18): the reader applies them as a survivor index view
-    // over each batch, ordinal-exact because dv'd files take no
-    // block-level predicate.
-    columnar: Boolean = false)
+    limit: Int = -1, keyVals: Array[Long] = Array.empty)
     extends InputPartition with HasPartitionKey {
   override def partitionKey(): InternalRow =
     new GenericInternalRow(keyVals.map(v => v: Any))
@@ -1434,6 +1423,8 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     with SupportsRuntimeFiltering with SupportsReportPartitioning
     with GraftNumFilesMetric.Reporting {
   override def readSchema(): StructType = required
+  override def columnarSupportMode(): Scan.ColumnarSupportMode =
+    Scan.ColumnarSupportMode.SUPPORTED
   override def toBatch: Batch = {
     if (follow) throw new UnsupportedOperationException(
       "graft.follow is a streaming option; the batch change feed is " +
@@ -1770,7 +1761,6 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     * (A pushed top-N always projects its bucket sort columns, so it is
     * key-grouped and its per-file limit stays per file.) */
   override def planInputPartitions(): Array[InputPartition] = {
-    val hasDataCols = required.exists(f => !GraftDataSource.isBucket(f.name))
     val keys = keyCols
     val survivors = bloomSurvivors(candidates())
     // row-level rewrites note every SURVIVING planned file (post bucket +
@@ -1794,8 +1784,6 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
         r.add(if (pin.isDefined) fr.path.toString else fr.path.toUri.getPath) }
     }
     plannedFiles = survivors.size
-    val columnarOk = hasDataCols && GraftColumnar.enabled &&
-      GraftColumnar.supportedSchema(required)
     val splits =
       if (keys.nonEmpty) survivors.map(Seq(_))
       else GraftSplits.pack(survivors)(_._1.size)
@@ -1804,12 +1792,11 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
           GraftFileSpec(fr.path.toString, b,
             dvPath = fr.dv.map(_._1).orNull,
             dvCount = fr.dv.map(_._2).getOrElse(0L))
-        }.toArray, !hasDataCols, limit,
+        }.toArray, limit,
         // getOrElse: a pre-regrid file lacks buckets a later geometry
         // added; -1 groups those files consistently (join conditions are
         // still row-checked — grouping is only co-location)
-        keys.map(k => split.head._2.getOrElse(k, -1L)),
-        columnar = columnarOk): InputPartition
+        keys.map(k => split.head._2.getOrElse(k, -1L))): InputPartition
     }.toArray
   }
 
@@ -1817,23 +1804,17 @@ class GraftScan(path: String, required: StructType, pushed: Array[Filter],
     new GraftReaderFactory(required, GraftHadoop.ship(), residual, renameAliases)
 }
 
+/** Reads every split of a graft scan columnar; the scan declares it
+  * (`columnarSupportMode`), so Spark never asks for a row reader. */
 class GraftReaderFactory(required: StructType,
     hadoopConf: GraftHadoop.Shipped,
     residual: Array[Filter] = Array.empty,
     aliases: Map[String, Seq[String]] = Map.empty)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftInputPartition]
-    new GraftSplitReader[InternalRow](p, (f, limit) =>
-      new GraftPartitionReader(f, p.rowCountOnly, limit, required,
-        hadoopConf.value, residual, aliases))
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    throw new UnsupportedOperationException("graft source: scans read columnar")
 
-  // r17 vectorized path: the flag is stamped scan-uniformly at planning
-  // (see GraftInputPartition.columnar), so a scan is all-columnar or
-  // all-row — the mixing Spark's exec layer forbids cannot arise
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    partition.asInstanceOf[GraftInputPartition].columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftInputPartition]
@@ -1905,257 +1886,5 @@ object GraftNumFilesMetric {
         override def value(): Long = n
       })
     }
-  }
-}
-
-/** Reads one chunk file with parquet-hadoop's Group API, projecting to the
-  * required data columns; bucket-column values come from the directory, like
-  * Spark's own partition-value population. A count-only scan (no data
-  * columns required) reads just the footer row count. Residual data-column
-  * filters are attached as a parquet `FilterPredicate` (per file, only when
-  * every referenced column exists in that file's schema), so row groups
-  * whose min/max exclude the predicate are skipped without touching a data
-  * page and surviving records are filtered at assembly — Spark re-checks
-  * the same filters above the scan, so the predicate only ever has to keep
-  * a superset. */
-class GraftPartitionReader(p: GraftFileSpec, rowCountOnly: Boolean,
-    // rows this file may still serve (−1 = no pushed limit)
-    limit: Long, required: StructType,
-    // the scan's shipped session conf, shared across tasks: read-only here
-    shared: Configuration,
-    residual: Array[Filter] = Array.empty,
-    aliases: Map[String, Seq[String]] = Map.empty)
-    extends GraftFileReader[InternalRow] {
-
-  private var reader: ParquetReader[Group] = _
-  private var cur: Group = _
-  private var remainingCountRows = 0L
-  // per required field: Left(constant — bucket long or _cell string) or
-  // Right((name, type)); data fields missing from the file (schema
-  // evolution) read as null
-  private var fields: Array[Either[Any, Option[(String, DataType)]]] = _
-  // indices of required `_pos` fields (the row-address metadata column):
-  // populated per row from the physical ordinal, not from the file
-  private var posFieldIdx: Array[Int] = Array.empty
-  // merge-on-read deletion vector: sorted physical ordinals to skip, with
-  // a monotone cursor (both read paths visit ordinals in order)
-  private var dv: Array[Long] = Array.emptyLongArray
-  private var dvIdx = 0
-  // physical ordinal of `cur` (data path) / of the next emitted count row
-  private var curOrdinal = -1L
-
-  locally {
-    val pfr = GraftHadoop.openFooter(new Path(p.file), shared)
-    val fileSchema: MessageType = pfr.getFooter.getFileMetaData.getSchema
-    val rowCount = pfr.getRecordCount
-    pfr.close()
-    if (p.dvPath != null) {
-      val dvP = new Path(p.dvPath)
-      dv = GraftDv.read(dvP.getFileSystem(shared), dvP)
-    }
-    // the CDC tag is a partition constant ONLY on change-feed reads: a
-    // table whose own data carries a _change_type column still reads it as
-    // a data field everywhere else (follow-mode refuses such tables)
-    def isChangeTag(name: String): Boolean =
-      name == GraftDataSource.ChangeColumn && p.changeTag != null
-    def isRowAddress(name: String): Boolean =
-      name == GraftDataSource.FileColumn || name == GraftDataSource.PosColumn
-    val dataFields = required.fields.filter(f =>
-      !GraftDataSource.isBucket(f.name) && f.name != GraftDataSource.CellColumn &&
-        !isChangeTag(f.name) && !isRowAddress(f.name))
-    // per data field, the name it carries in THIS file: the current name,
-    // or (files written before a RENAME) the newest alias present; None =
-    // the field predates every spelling and reads as NULL
-    def fieldInFile(name: String): Option[String] =
-      GraftDataSource.resolveInFile(fileSchema, name, aliases)
-    fields = required.fields.map { f =>
-      if (GraftDataSource.isBucket(f.name))
-        // a bucket column the path does not bind (file written under an
-        // older grid geometry, read through a post-regrid schema) is NULL
-        p.buckets.get(f.name).map(Left(_): Either[Any, Option[(String, DataType)]])
-          .getOrElse(Right(None))
-      else if (f.name == GraftDataSource.CellColumn)
-        Left(UTF8String.fromString(GraftDataSource.cellString(p.buckets)))
-      else if (f.name == GraftDataSource.FileColumn)
-        Left(UTF8String.fromString(p.file))
-      else if (f.name == GraftDataSource.PosColumn)
-        Right(None) // placeholder; populated per row via posFieldIdx
-      else if (isChangeTag(f.name)) Left(UTF8String.fromString(p.changeTag))
-      else fieldInFile(f.name) match {
-        case Some(rn) => Right(Some((rn, f.dataType)))
-        case None if f.metadata.contains("EXISTS_DEFAULT") =>
-          // column added with a DEFAULT after this file was written: rows
-          // read back as the existence default, not NULL (Spark's own
-          // resolver evaluates the stored literal to its internal form)
-          Left(org.apache.spark.sql.catalyst.util.ResolveDefaultColumns
-            .getExistenceDefaultValue(f))
-        case None => Right(None)
-      }
-    }
-    posFieldIdx = required.fields.zipWithIndex
-      .collect { case (f, i) if f.name == GraftDataSource.PosColumn => i }
-    val needsOrdinals = posFieldIdx.nonEmpty || dv.nonEmpty
-    if (rowCountOnly || !dataFields.exists(f => fieldInFile(f.name).isDefined)) {
-      remainingCountRows = rowCount - dv.length
-    } else {
-      val projection = new MessageType("graft_projection",
-        dataFields.toSeq.flatMap(f => fieldInFile(f.name))
-          .map(rn => fileSchema.getFields.get(fileSchema.getFieldIndex(rn))): _*)
-      val conf = new Configuration(shared)
-      conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-      val types = required.fields
-        .map(f => f.name -> f.dataType).toMap
-      // parquet predicates only for columns this file stores under their
-      // CURRENT name at the width the predicate was built for: a renamed
-      // column's old-name field or a pre-widening INT32 field would make
-      // the typed parquet column mismatch. Dropping the predicate is always
-      // safe — residuals are Spark-rechecked row-exactly. ALSO dropped
-      // whenever physical ordinals matter (_pos required, or a deletion
-      // vector to apply): row-group skips and record filtering would
-      // silently desynchronize the ordinal counter from the file.
-      val preds =
-        if (needsOrdinals) Nil
-        else residual.toSeq
-          .filter(_.references.forall(r => fileSchema.containsField(r) &&
-            GraftDataSource.parquetPredicateCompatible(fileSchema, r, types.get(r))))
-          .flatMap(GraftDataSource.toParquetPredicate(_, types))
-      val builder = ParquetReader.builder(new GroupReadSupport(), new Path(p.file))
-        .withConf(conf)
-      reader =
-        if (preds.isEmpty) builder.build()
-        else builder.withFilter(org.apache.parquet.filter2.compat.FilterCompat.get(
-          preds.reduce(org.apache.parquet.filter2.predicate.FilterApi.and(_, _))))
-          .build()
-    }
-  }
-
-  private var emitted = 0L
-  override def emittedRows: Long = emitted
-
-  // is `ord` the next deleted ordinal? (positions are sorted and both read
-  // paths visit ordinals ascending, so one cursor pass suffices)
-  private def deleted(ord: Long): Boolean =
-    if (dvIdx < dv.length && dv(dvIdx) == ord) { dvIdx += 1; true } else false
-
-  override def next(): Boolean = {
-    // pushed limit: stop this file early (see GraftSplitReader)
-    if (limit >= 0 && emitted >= limit) return false
-    val has =
-      if (reader == null) {
-        // count mode still honors the vector and the ordinal contract:
-        // remainingCountRows was debited up front, and each emitted row's
-        // ordinal skips the deleted ones (a _pos-only projection lands here)
-        if (remainingCountRows > 0) {
-          remainingCountRows -= 1
-          curOrdinal += 1
-          while (deleted(curOrdinal)) curOrdinal += 1
-          true
-        } else false
-      } else {
-        var keep = false
-        var more = true
-        while (!keep && more) {
-          cur = reader.read()
-          if (cur == null) more = false
-          else {
-            curOrdinal += 1
-            keep = !deleted(curOrdinal)
-          }
-        }
-        keep
-      }
-    if (has) emitted += 1
-    has
-  }
-
-  override def get(): InternalRow = {
-    val row = new GenericInternalRow(fields.length)
-    var i = 0
-    while (i < fields.length) {
-      fields(i) match {
-        case Left(bucketVal: Long) =>
-          required.fields(i).dataType match {
-            case IntegerType => row.update(i, bucketVal.toInt)
-            case _           => row.update(i, bucketVal)
-          }
-        case Left(constant) => row.update(i, constant)
-        case Right(None) => row.setNullAt(i)
-        case Right(Some((name, dt))) =>
-          if (cur == null || cur.getFieldRepetitionCount(name) == 0) row.setNullAt(i)
-          else {
-            val idx = cur.getType.getFieldIndex(name)
-            dt match {
-              case LongType    =>
-                // integral WIDENING: files written before an ALTER COLUMN
-                // TYPE BIGINT keep their INT32 pages; upcast at read
-                val pt = cur.getType.getType(idx).asPrimitiveType()
-                  .getPrimitiveTypeName
-                if (pt == org.apache.parquet.schema.PrimitiveType
-                    .PrimitiveTypeName.INT32)
-                  row.update(i, cur.getInteger(idx, 0).toLong)
-                else row.update(i, cur.getLong(idx, 0))
-              case IntegerType => row.update(i, cur.getInteger(idx, 0))
-              case DoubleType  => row.update(i, cur.getDouble(idx, 0))
-              case FloatType   => row.update(i, cur.getFloat(idx, 0))
-              case BooleanType => row.update(i, cur.getBoolean(idx, 0))
-              case StringType  => row.update(i, UTF8String.fromString(cur.getString(idx, 0)))
-              case BinaryType  => row.update(i, cur.getBinary(idx, 0).getBytes)
-              case TimestampType =>
-                // INT64 micros (the modern form, and what the graft writer
-                // emits) or legacy INT96 (what some engines still write)
-                val pt = cur.getType.getType(idx).asPrimitiveType().getPrimitiveTypeName
-                if (pt == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
-                  row.update(i, GraftPartitionReader.int96Micros(cur.getInt96(idx, 0)))
-                else row.update(i, cur.getLong(idx, 0))
-              case ArrayType(et, _) =>
-                row.update(i, GraftPartitionReader.readList(cur.getGroup(idx, 0), et))
-              case other => throw new UnsupportedOperationException(
-                s"graft source: unsupported type $other for column $name")
-            }
-          }
-      }
-      i += 1
-    }
-    posFieldIdx.foreach(idx => row.update(idx, curOrdinal))
-    row
-  }
-
-  override def close(): Unit = if (reader != null) reader.close()
-}
-
-object GraftPartitionReader {
-  /** INT96 → microseconds: 8 LE bytes nanos-of-day + 4 LE bytes Julian day
-    * (the legacy Impala timestamp layout some writers still emit). */
-  private[sources] def int96Micros(b: org.apache.parquet.io.api.Binary): Long = {
-    val buf = java.nio.ByteBuffer.wrap(b.getBytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-    val nanosOfDay = buf.getLong
-    val julianDay = buf.getInt
-    (julianDay - 2440588L) * 86400000000L + nanosOfDay / 1000L
-  }
-
-  /** Standard 3-level LIST (`optional group x (LIST) { repeated group list
-    * { optional <t> element } }`) → Catalyst ArrayData. Both Spark's parquet
-    * writer (non-legacy mode) and the graft writer emit this shape. */
-  private[sources] def readList(listField: Group, et: DataType)
-      : org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = listField.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    var k = 0
-    while (k < n) {
-      val elem = listField.getGroup(0, k)
-      out(k) =
-        if (elem.getFieldRepetitionCount(0) == 0) null
-        else et match {
-          case FloatType   => elem.getFloat(0, 0)
-          case DoubleType  => elem.getDouble(0, 0)
-          case LongType    => elem.getLong(0, 0)
-          case IntegerType => elem.getInteger(0, 0)
-          case StringType  => UTF8String.fromString(elem.getString(0, 0))
-          case other => throw new UnsupportedOperationException(
-            s"graft source: unsupported array element type $other")
-        }
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }

@@ -231,7 +231,6 @@ class GraftMicroBatchStream(path: String, required: StructType,
     val fs = fileSystem
     if (follow) return planChanges(fs, start, end)
     val seen = seenRels(fs, start)
-    val hasDataCols = required.exists(f => !GraftDataSource.isBucket(f.name))
     // bucket values are recoverable from the path itself (c<i>=<v> segments)
     // dv rides along where the plan is manifest-resolved: a file appended
     // then vectored before the stream reaches it is read minus its deleted
@@ -254,7 +253,7 @@ class GraftMicroBatchStream(path: String, required: StructType,
     batch.map { case (f, b, dv) =>
       GraftInputPartition(Array(GraftFileSpec(f.toString, b,
         dvPath = dv.map(d => new Path(root, d._1).toString).orNull,
-        dvCount = dv.map(_._2).getOrElse(0L))), !hasDataCols): InputPartition
+        dvCount = dv.map(_._2).getOrElse(0L)))): InputPartition
     }.toArray
   }
 
@@ -270,10 +269,6 @@ class GraftMicroBatchStream(path: String, required: StructType,
           "checkpoint belongs to a plain (non-CDC) stream")
     }
     val b = end.asInstanceOf[GraftVersionOffset].v
-    // data columns beyond the tag still require file reads; a projection of
-    // only buckets + _change_type reads footer counts
-    val hasDataCols = required.exists(f => !GraftDataSource.isBucket(f.name) &&
-      f.name != GraftDataSource.ChangeColumn)
     // each side reads under its OWN version's deletion vector: a dv-swap
     // commit surfaces its file on both sides (diffFiles keys by (rel, dv)),
     // and the insert-minus-delete row difference is exactly the rows the
@@ -282,8 +277,7 @@ class GraftMicroBatchStream(path: String, required: StructType,
       GraftVersions.diffFiles(fs, root, base, target, pushed).map { case (f, bk, e) =>
         GraftInputPartition(Array(GraftFileSpec(f.toString, bk,
           dvPath = e.dv.map(d => new Path(root, d._1).toString).orNull,
-          dvCount = e.dv.map(_._2).getOrElse(0L), changeTag = tag)),
-          !hasDataCols): InputPartition
+          dvCount = e.dv.map(_._2).getOrElse(0L), changeTag = tag))): InputPartition
       }
     (side(a, b, "insert") ++ side(b, a, "delete")).toArray
   }

@@ -225,7 +225,6 @@ final class World(val spark: SparkSession, val path: String, val dims: Seq[DimSp
     // each query still scans the parquet files themselves (r17, guide §6:
     // "manifest metadata avoids directory listing" is only an advantage if
     // the read path doesn't relist per query).
-    if (!World.readMemoEnabled) return dfOverUncached(entries)
     val sig = (entries.map(e => (e.rel, e.size, e.dv)), spark, path)
     World.readMemo.get(sig) match {
       case Some(cached) => return cached
@@ -800,21 +799,17 @@ object World {
   def apply(spark: SparkSession, path: String)(dims: (String, DimMapping)*): World =
     new World(spark, path, dims.map { case (c, m) => DimSpec(c, m) })
 
+  /** Drop every memoized read frame — called by [[graft.ops.Pins.releaseAll]]
+    * at end-of-query so memoized DataFrames (and the SparkSessions they
+    * reference) never accumulate across a suite. */
+  def clearReadMemo(): Unit = readMemo.clear()
+
   /** Bounded LRU of manifest-addressed read frames (see [[World.dfOver]]):
     * key = (exact entry signature, session, path), value = the analyzed
     * DataFrame over those files. Capped small — entries are metadata-sized,
     * but each value pins its SparkSession; eviction keeps stopped test
     * sessions collectable. Synchronized: reads race with maintenance
     * writers at most per-query, never per-row. */
-  /** Dev kill switch for A/B measurement: -Dgraft.world.readMemo=off. */
-  private[world] def readMemoEnabled: Boolean =
-    !sys.props.get("graft.world.readMemo").contains("off")
-
-  /** Drop every memoized read frame — called by [[graft.ops.Pins.releaseAll]]
-    * at end-of-query so memoized DataFrames (and the SparkSessions they
-    * reference) never accumulate across a suite. */
-  def clearReadMemo(): Unit = readMemo.clear()
-
   private[world] object readMemo {
     private val MaxEntries = 128
     private val m = new java.util.LinkedHashMap[Any, DataFrame](64, 0.75f, true) {

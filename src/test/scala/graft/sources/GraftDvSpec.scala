@@ -479,7 +479,7 @@ class GraftDvSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE dvcat.wd")
   }
 
-  test("r18 columnar MoR read: dv'd scans stay vectorized and match the row reader") {
+  test("r18 columnar MoR read: dv'd scans stay vectorized and match the data model") {
     spark.sql("CREATE TABLE dvcat.tcol (d0 BIGINT, v BIGINT, s STRING, c0 BIGINT)")
     spark.sql("INSERT INTO dvcat.tcol SELECT id, id * 10, concat('s', id), id DIV 25" +
       " FROM range(0, 100)")
@@ -497,28 +497,25 @@ class GraftDvSpec extends AnyFunSuite with BeforeAndAfterAll {
     val deleted = Set(0L, 1L, 13L, 24L, 25L, 49L, 50L, 99L)
     assert(viaColumnar.size == 92 &&
       !viaColumnar.exists(r => deleted(r.getAs[Long]("d0"))))
-    // row-reader ground truth via the session escape hatch
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-    val viaRow =
-      try {
-        val d = readAll().orderBy("d0")
-        val rows = d.collect().toSeq
-        assert(!d.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-        rows
-      } finally spark.conf.set("spark.sql.parquet.enableVectorizedReader", "true")
-    assert(viaColumnar == viaRow)
-    // pushed limit counts LIVE rows on both paths
+    // the inserted model, minus the deleted set
+    val survivors = (0L until 100L).filterNot(deleted)
+    assert(viaColumnar.map(r => (r.getAs[Long]("d0"), r.getAs[Long]("v"),
+      r.getAs[String]("s"), r.getAs[Long]("c0"))) ==
+      survivors.map(d => (d, 10 * d, s"s$d", d / 25)))
+    // pushed limit counts LIVE rows
     assert(readAll().limit(95).count() == 92L)
     // const-only projection (bucket + _cell — no data column) through dv'd
     // files: the synthesized constant batches still debit the vector
     val constCols = readAll().select("c0", "_cell").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-    val constRows =
-      try readAll().select("c0", "_cell").collect()
-        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      finally spark.conf.set("spark.sql.parquet.enableVectorizedReader", "true")
-    assert(constCols == constRows && constCols.size == 92)
+    assert(constCols == survivors.map(d => (d / 25, s"c0=${d / 25}")) &&
+      constCols.size == 92)
+    // bucket-only projection: constant batches too, through the same reader
+    val bucketOnly = readAll().select("c0")
+    assert(bucketOnly.collect().map(_.getLong(0)).sorted.toSeq ==
+      survivors.map(_ / 25))
+    assert(bucketOnly.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      bucketOnly.queryExecution.executedPlan.toString)
     // residual filter over a dv'd columnar scan: Spark's re-check keeps it
     // row-exact even though block predicates are dropped for ordinal safety
     assert(readAll().where("v >= 130 AND v < 300").count() ==
@@ -551,11 +548,21 @@ class GraftDvSpec extends AnyFunSuite with BeforeAndAfterAll {
         "survivor rows must keep their own values (no off-by-one row slip)")
       rows.map(_._1).sorted.toSeq
     }
-    val viaColumnar = readSum()
-    assert(viaColumnar == expect)
-    spark.conf.set("spark.sql.parquet.enableVectorizedReader", "false")
-    try assert(readSum() == expect)
-    finally spark.conf.set("spark.sql.parquet.enableVectorizedReader", "true")
+    assert(readSum() == expect)
+    // `_pos` is the physical ordinal, and the file holds d0 in ordinal order
+    val addressed = spark.read.format("graft").load(s"$warehouse/tbig")
+      .selectExpr("_pos", "d0")
+    val addrs = addressed.collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(addrs.map(_._2).sorted.toSeq == expect)
+    assert(addrs.forall { case (p, d) => p == d },
+      s"_pos must equal d0: ${addrs.filter { case (p, d) => p != d }.take(5).toSeq}")
+    assert(addressed.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      addressed.queryExecution.executedPlan.toString)
+    // a `_pos`-only projection has no data column: the reader walks the
+    // ordinals itself, skipping the deleted ones
+    val posOnly = spark.read.format("graft").load(s"$warehouse/tbig")
+      .selectExpr("_pos").collect().map(_.getLong(0)).sorted.toSeq
+    assert(posOnly == expect)
     // live-row limit across the wiped-out middle batch
     assert(spark.read.format("graft").load(s"$warehouse/tbig")
       .limit(5000).count() == 5000L)

@@ -85,7 +85,7 @@ class GraftHadoopSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(full.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
         "a plain projection reads through the columnar reader")
 
-      // _pos is served by the row reader: every file's ordinals are 0..n-1
+      // _pos is the physical ordinal: every file's ordinals are 0..n-1
       val addressed = df.select("d0", "_file", "_pos").as[(Long, String, Long)].collect()
       assert(addressed.map(_._1).sorted.toSeq == expected.map(_._1))
       addressed.groupBy(_._2).foreach { case (f, rs) =>
@@ -279,6 +279,9 @@ class GraftHadoopSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val valueCreate = """([\w)]+)\s*\.create\(""".r
   private val builderOpen = java.util.regex.Pattern.quote("new GraftParquetWriterBuilder(").r
   private val hadoopOutput = java.util.regex.Pattern.quote("HadoopOutputFile.fromPath(").r
+  // the Group-API read only GraftDv's record copy keeps: scans decode
+  // through GraftColumnarPartitionReader
+  private val groupRead = """GroupReadSupport|ParquetReader\.builder""".r
 
   /** The text of the first argument of the call whose '(' ends just before `from`. */
   private def firstArg(src: String, from: Int): String = {
@@ -296,8 +299,9 @@ class GraftHadoopSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   /** `name:line: what` for each fresh default conf and one-argument footer
-    * open, and, outside GraftHadoop.scala, each file created around
-    * [[GraftHadoop.create]] / [[GraftHadoop.outputFile]]. */
+    * open; outside GraftHadoop.scala, each file created around
+    * [[GraftHadoop.create]] / [[GraftHadoop.outputFile]]; and outside
+    * GraftDv.scala, each parquet Group-API read. */
   private def violations(name: String, src: String): Seq[String] = {
     def line(at: Int) = src.substring(0, at).count(_ == '\n') + 1
     val creates =
@@ -310,10 +314,14 @@ class GraftHadoopSpec extends AnyFunSuite with BeforeAndAfterAll {
           .map(m => s"$name:${line(m.start)}: writer builder not on GraftHadoop.outputFile") ++
         hadoopOutput.findAllMatchIn(src)
           .map(m => s"$name:${line(m.start)}: HadoopOutputFile, not GraftHadoop.outputFile")
+    val groupReads =
+      if (name == "GraftDv.scala") Nil
+      else groupRead.findAllMatchIn(src)
+        .map(m => s"$name:${line(m.start)}: Group-API read, not the columnar reader")
     (freshConf.findAllMatchIn(src).map(m => s"$name:${line(m.start)}: ${m.matched}") ++
       footerOpen.findAllMatchIn(src).filter(m => arity(src, m.end) == 1)
         .map(m => s"$name:${line(m.start)}: one-argument ParquetFileReader.open") ++
-      creates).toSeq
+      creates ++ groupReads).toSeq
   }
 
   test("lint checker flags fresh confs and one-argument footer opens only") {
@@ -353,7 +361,23 @@ class GraftHadoopSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(violations("GraftHadoop.scala", bad.head).isEmpty)
   }
 
-  // also fails on a file created around GraftHadoop.create / outputFile
+  test("lint checker flags parquet Group-API reads outside GraftDv.scala") {
+    val bad = Seq(
+      "import org.apache.parquet.hadoop.example.GroupReadSupport",
+      "val r = ParquetReader.builder(support, new Path(file)).withConf(c).build()")
+    val good = Seq(
+      "new GraftColumnarPartitionReader(spec, -1L, schema, conf)",
+      "import org.apache.parquet.hadoop.example.GroupWriteSupport",
+      "val reader: ParquetReader[Group] = null")
+    good.foreach(s => assert(violations("x.scala", s).isEmpty, s))
+    bad.foreach { s =>
+      assert(violations("x.scala", s).size == 1, s)
+      assert(violations("GraftDv.scala", s).isEmpty, s)
+    }
+  }
+
+  // also fails on a file created around GraftHadoop.create / outputFile, and
+  // on a Group-API read outside GraftDv.scala
   test("lint: sources/ builds no default Configuration and opens no footer without read options") {
     val dir = new java.io.File("src/main/scala/graft/sources")
     val files = Option(dir.listFiles()).toSeq.flatten.filter(_.getName.endsWith(".scala"))

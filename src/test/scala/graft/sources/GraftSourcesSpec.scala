@@ -1,14 +1,26 @@
 package graft.sources
 
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.{LongType, StructField, StructType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
+import java.nio.file.{Files, Paths}
 
-/** Unit coverage for connector pieces that only execute on paths the
+/** Coverage for connector pieces that only execute on paths the
   * integration tests don't take: offset deserialization happens on STREAM
-  * RESTART (StreamingSpec runs a single uninterrupted query), and the INT96
-  * decode runs only against files from writers configured for the legacy
-  * timestamp layout.
+  * RESTART (StreamingSpec runs a single uninterrupted query), and INT96
+  * timestamps only arrive in files from writers configured for the legacy
+  * timestamp layout — read here end to end, from a Spark-written file.
   */
-class GraftSourcesSpec extends AnyFunSuite {
+class GraftSourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
+  private lazy val spark = SparkSession.builder()
+    .master("local[2]")
+    .config("spark.sql.shuffle.partitions", "2")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.session.timeZone", "UTC")
+    .getOrCreate()
+
+  override def afterAll(): Unit = spark.stop()
 
   test("partial-binding filter evaluation prunes subtrees only when decidable") {
     import org.apache.spark.sql.sources._
@@ -47,18 +59,28 @@ class GraftSourcesSpec extends AnyFunSuite {
   }
 
   test("INT96 timestamps decode to epoch micros (Julian day + nanos-of-day, little-endian)") {
-    def int96(julianDay: Int, nanosOfDay: Long): org.apache.parquet.io.api.Binary = {
-      val buf = java.nio.ByteBuffer.allocate(12).order(java.nio.ByteOrder.LITTLE_ENDIAN)
-      buf.putLong(nanosOfDay).putInt(julianDay)
-      org.apache.parquet.io.api.Binary.fromConstantByteArray(buf.array())
-    }
-    // 2440588 = Julian day of 1970-01-01
-    assert(GraftPartitionReader.int96Micros(int96(2440588, 0L)) == 0L)
-    // one day + 1.5 ms later
-    assert(GraftPartitionReader.int96Micros(int96(2440589, 1500000L)) ==
-      86400000000L + 1500L)
-    // pre-epoch: one day before, noon
-    assert(GraftPartitionReader.int96Micros(int96(2440587, 43200L * 1000000000L)) ==
-      -86400000000L + 43200000000L)
+    import spark.implicits._
+    // epoch; epoch + 1 day + 1.5 ms; noon of the day before the epoch
+    val micros = Seq(0L, 86400000000L + 1500L, -86400000000L + 43200000000L)
+    val root = Files.createTempDirectory("graft-int96").toString
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "INT96")
+    try micros.toDF("m").selectExpr("timestamp_micros(m) AS ts").coalesce(1)
+      .write.parquet(root + "/c0=0")
+    finally spark.conf.unset("spark.sql.parquet.outputTimestampType")
+    val file = new java.io.File(root + "/c0=0").listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    val pfr = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file.toString),
+        spark.sparkContext.hadoopConfiguration))
+    val stored = try pfr.getFooter.getFileMetaData.getSchema.getFields.get(0)
+      .asPrimitiveType.getPrimitiveTypeName finally pfr.close()
+    assert(stored == org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT96)
+    val schema = StructType(Seq(StructField("ts", TimestampType),
+      StructField("c0", LongType)))
+    Files.write(Paths.get(root, "_graft_schema.json"), schema.json.getBytes("UTF-8"))
+    val got = spark.read.format("graft").load(root)
+      .selectExpr("unix_micros(ts)").as[Long].collect().sorted.toSeq
+    assert(got == micros.sorted)
   }
 }

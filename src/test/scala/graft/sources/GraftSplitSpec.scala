@@ -111,23 +111,24 @@ class GraftSplitSpec extends AnyFunSuite with BeforeAndAfterAll
     val got = df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(got == live.map(d => (d, d * 10)))
     val splits = splitsOf(df)
-    assert(splits.nonEmpty && splits.forall(_.columnar), "the scan reads columnar")
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      "the scan reads columnar")
     assert(splits.length < 10 && splits.map(_.files.length).sum == 10)
     assert(splits.exists(s => s.files.exists(_.dvPath != null) &&
       s.files.exists(_.dvPath == null)),
       s"some split must mix vectored and clean files: ${splits.map(_.files.toSeq)}")
   }
 
-  test("_file/_pos through the row reader stay paired with their own file across a split") {
+  test("_file/_pos stay paired with their own file across a columnar split") {
     def addrs(): (Seq[(String, Long, Long)], Seq[GraftInputPartition]) = {
       val df = spark.sql("SELECT _file, _pos, d0 FROM scat.ten")
       val rows = df.collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
       (rows.sorted, splitsOf(df))
     }
     ten
     val (packed, splits) = addrs()
-    assert(splits.forall(!_.columnar) && splits.exists(_.files.length > 1),
-      "the row reader reads multi-file splits")
+    assert(splits.exists(_.files.length > 1), "multi-file splits are read")
     // one file per split: the plan a per-file scan made
     val (perFile, single) = withConfs("spark.sql.files.maxPartitionBytes" -> "1")(addrs())
     assert(single.length == 10 && single.forall(_.files.length == 1))
@@ -148,24 +149,19 @@ class GraftSplitSpec extends AnyFunSuite with BeforeAndAfterAll
       val viaRows = spark.sql(s"SELECT _pos, d0 FROM scat.ten LIMIT $n").collect()
       assert(viaRows.length == n)
     }
-    // reader level: a split serves min(limit, its live rows), both readers
+    // reader level: a split serves min(limit, its live rows), with and
+    // without `_pos`
     val scan = new GraftScan(ten, StructType(Seq(StructField("d0", LongType))),
       Array.empty, limit = 150)
-    val rowScan = new GraftScan(ten, StructType(Seq(
+    val posScan = new GraftScan(ten, StructType(Seq(
       StructField(GraftDataSource.PosColumn, LongType), StructField("d0", LongType))),
       Array.empty, limit = 150)
-    for (s <- Seq(scan, rowScan); p <- s.planInputPartitions()) {
+    for (s <- Seq(scan, posScan); p <- s.planInputPartitions()) {
       val split = p.asInstanceOf[GraftInputPartition]
       val liveRows = split.files.map(f => 100L - f.dvCount).sum
-      val factory = s.createReaderFactory()
       var n = 0L
-      if (split.columnar) {
-        val r = factory.createColumnarReader(p)
-        try while (r.next()) n += r.get().numRows() finally r.close()
-      } else {
-        val r = factory.createReader(p)
-        try while (r.next()) n += 1 finally r.close()
-      }
+      val r = s.createReaderFactory().createColumnarReader(p)
+      try while (r.next()) n += r.get().numRows() finally r.close()
       assert(n == math.min(150L, liveRows), s"split ${split.files.toSeq}")
     }
   }

@@ -267,6 +267,9 @@ class GraftStreamCursorSpec extends AnyFunSuite with BeforeAndAfterAll {
         (3L, 30L, "insert"),                      // v2
         (2L, 120L, "insert"), (2L, 20L, "delete") // v3: after- and before-image
       ), s"got $got")
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), s"change-feed batches read columnar: $plan")
     } finally q.stop()
   }
 

@@ -157,6 +157,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         .collect().map(_.getLong(0)).toSet
       assert(got == Set(1L, 10L),
         s"appended unpruned chunk flows through; pruned chunk stays out: $got")
+      val plan = q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime
+        .StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan.toString
+      assert(plan.contains("ColumnarToRow"), s"micro-batches read columnar: $plan")
     } finally q.stop()
   }
 

@@ -502,6 +502,15 @@ class WorldSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rq = spark.read.format("graft").load(root2)
       .where(col("v") >= 6000L && col("v") < 6600L)
     assert(rq.collect().map(_.getAs[Long]("d0")).toSet == (2000L until 2200L).toSet)
+    // with `_pos` required the row-group predicate is dropped: a skipped
+    // group would shift every later ordinal (the file holds d0 in order)
+    val addressed = spark.read.format("graft").load(root2)
+      .select(col("_pos"), col("d0"), col("v"))
+      .where(col("v") >= 6000L && col("v") < 6600L)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(addressed.map(_._2).toSet == (2000L until 2200L).toSet)
+    assert(addressed.forall { case (pos, d0) => pos == d0 },
+      addressed.filter { case (pos, d0) => pos != d0 }.take(5).toSeq)
   }
 
   test("DataSource V2 limit pushdown: partition readers stop at the pushed prefix") {
