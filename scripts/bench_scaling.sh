@@ -39,7 +39,7 @@ echo "== declared data-dense subset (bench harness) =="
 QS="t_fuzzy_match,t_winnow,t_compress_ratio,t_langid,t_hash_embed,s_rp_project,s_sq8_codes,m_image_dhash,m_audio_ahash,m_video_thash,m_resize,q_window_running,q_math_fns,d_simhash_exact,d_paragraph_dedup"
 for CPUS in 8 32; do
   SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=$CPUS \
-    SPARK_GRAFT_BENCH_ONLY="$QS" \
+    SPARK_GRAFT_ONLY="$QS" \
     SPARK_GRAFT_BENCH_LABEL="scaling-${CPUS}c" \
     SPARK_GRAFT_BENCH_OUT="/tmp/graft_scaling_${CPUS}.json" \
     scripts/run.sh graft.Bench > /dev/null 2>&1

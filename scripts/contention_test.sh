@@ -45,7 +45,7 @@ cleanup() {
 }
 trap cleanup EXIT
 
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_BENCH_ONLY="$QUERIES" \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_ONLY="$QUERIES" \
   SPARK_GRAFT_CANARY_EVERY=2 SPARK_GRAFT_BENCH_OUT="$OUT" \
   SPARK_GRAFT_PHASE_FILE="$PHASE_FILE" \
   scripts/run.sh graft.Bench >/dev/null 2>&1 &
@@ -56,7 +56,7 @@ for i in $(seq 1 300); do [ -f "$PHASE_FILE" ] && break; sleep 0.5; done
 echo "[contention] timed phase reached - starting hogs over the first windows"
 
 # a second Spark JVM doing real shuffles/spills — the r15 contamination class
-SPARK_GRAFT_SF_DIR="$HOG_SF" SPARK_GRAFT_BENCH_ONLY=d_minhash_exact,g_pagerank \
+SPARK_GRAFT_SF_DIR="$HOG_SF" SPARK_GRAFT_ONLY=d_minhash_exact,g_pagerank \
   SPARK_GRAFT_BENCH_OUT=/tmp/graft_hog_bench.json \
   scripts/run.sh graft.Bench >/dev/null 2>&1 &
 HOG_PIDS+=($!)

@@ -1,61 +1,30 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import Harness.jsonString
 import org.apache.spark.sql.functions._
 
 object Bench {
-  /** Timed action: iterate the physical plan's output rows with the full
-    * output schema. `.count()` lets Catalyst prune unreferenced projections,
-    * billing expression-heavy queries at scan cost; `toRdd` keeps every
-    * output column in the produced UnsafeRows, so the real expression work
-    * is measured. */
-  private def materialize(df: DataFrame): Long =
-    df.queryExecution.toRdd.mapPartitions { it =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single(n)
-    }.fold(0L)(_ + _)
-
-  /** The registry's two admitted global windows (rank over a LIMIT-reduced
-    * top-k — t_zipf_fit, s_hybrid_rrf's lexical side; ≤ 100 rows by
-    * construction, statically admitted by RegistryScaleSpec) make
-    * WindowExec WARN "No Partition Defined … serious performance
-    * degradation" on every harness run — alarm noise over a non-problem
-    * that would page someone at 3am. Scope the suppression to exactly that
-    * one logger so real hazards elsewhere still surface; queries that
-    * would ACTUALLY single-reduce are caught structurally by
-    * RegistryScaleSpec, not by grepping logs. */
-  def silenceBoundedWindowWarn(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
-
   /** The committed full-fidelity bench history: every FULL-suite run appends
     * its JSON line here (narrowed dev runs don't), so the next round's drift
     * check has a complete same-host baseline — the driver's own BENCH_r*.json
     * keeps only a 2000-char stdout tail, which truncates the queries map. */
-  private val HistoryFile = "BENCH_HISTORY.jsonl"
+  private val HistoryFile = new java.io.File("BENCH_HISTORY.jsonl")
 
-  /** Per-query best from the most recent comparable prior record — the
-    * cross-round drift baseline (r16). Sources, in order:
-    *  1. the last same-sf line of [[HistoryFile]] (read BEFORE this run
-    *     appends, so it is genuinely the prior run);
-    *  2. the newest in-repo `BENCH_r*.json` driver wrapper — only a stdout
-    *     tail survives there, so recover what it holds: the raw
-    *     `"name":[a,b,...]` sample arrays (best ≈ min), partial coverage.
-    * Parsed with regexes over the flat shapes Bench itself wrote (no JSON
-    * dependency; names are [a-z0-9_] by construction). Only comparable
-    * records count: the record must carry the SAME sf dir (a local sf0.001
-    * iteration must not judge itself against sf0.1 history, nor vice
-    * versa). */
-  private def priorBest(sfDir: String): (String, Map[String, Double]) = {
-    val sfTag = "\"sf\":\"" + sfDir + "\""
+  /** Per-query best from the last same-sf line of `history` that is not
+    * host_degraded — the cross-round drift baseline (r16), read BEFORE this
+    * run appends, so it is genuinely the prior run. Parsed with a regex over
+    * the flat shape Bench itself writes (no JSON dependency; names are
+    * [a-z0-9_] by construction). Only comparable records count: the record
+    * must carry the SAME sf dir (a local sf0.001 iteration must not judge
+    * itself against sf0.1 history, nor vice versa). Returns the baseline's
+    * name, empty when no line matches. */
+  private[graft] def priorBest(sfDir: String,
+      history: java.io.File): (String, Map[String, Double]) = {
+    val sfTag = "\"sf\":" + jsonString(sfDir)
     val kvNum = "\"([a-z0-9_]+)\":([0-9][0-9.eE+\\-]*)".r
-    val kvArr = "\"([a-z0-9_]+)\":\\[([0-9][0-9.,eE+\\-]*)\\]".r
-    val hist = new java.io.File(HistoryFile)
-    val fromHistory: Option[(String, Map[String, Double])] =
-      if (!hist.isFile) None
+    val found =
+      if (!history.isFile) None
       else scala.util.Try {
-        val src = scala.io.Source.fromFile(hist, "UTF-8")
+        val src = scala.io.Source.fromFile(history, "UTF-8")
         val lines = try src.getLines().toVector finally src.close()
         // a contaminated prior (host_degraded) would inflate the baseline
         // and let a 3x-of-already-inflated regression pass as healthy — the
@@ -69,90 +38,17 @@ object Bench {
               line.indexOf("}", qStart))
             val m = kvNum.findAllMatchIn(body)
               .map(g => g.group(1) -> g.group(2).toDouble).toMap
-            if (m.nonEmpty) Some((HistoryFile, m)) else None
+            if (m.nonEmpty) Some((history.getPath, m)) else None
           }
         }
       }.toOption.flatten
-    val fromDriverTail: Option[(String, Map[String, Double])] = {
-      val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      if (files.isEmpty) None
-      else {
-        val latest = files.maxBy(f => f.getName.replaceAll("\\D", "").toInt)
-        scala.util.Try {
-          // the wrapper embeds our stdout as a JSON string — unescape
-          // before matching the shapes we originally printed
-          val s = new String(
-            java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-            .replace("\\\"", "\"")
-          if (!s.contains(sfTag)) None
-          else {
-            // anchor to the raw-sample map: the tail also holds
-            // query_window_canaries entries ("name":[~0.2,0.3]) keyed by
-            // REAL query names — parsed as priors they would flag nearly
-            // every query as drift. Since r17 the line prints `raw` as
-            // the LAST map before the fixed ~600-char summary scalars
-            // (detectable by the r17 `stamp_utc` field), so a truncated
-            // r17 tail either carries the '"raw":{' marker (only its
-            // interior counts) or BEGINS inside the raw map. Pre-r17
-            // records printed more "name":[nums]-shaped maps after raw
-            // (drift_vs_prior is indistinguishable from raw interior), so
-            // a marker-less PRE-r17 fragment is rejected outright rather
-            // than risked as misread priors. The fragment is sliced from
-            // the captured tail payload, not the wrapper's own metadata
-            // prefix, so the shape check judges the data it reasons
-            // about.
-            val rawIdx = s.lastIndexOf("\"raw\":{")
-            val tailKey = s.indexOf("\"tail\"")
-            val tailStart =
-              if (tailKey < 0) 0
-              else {
-                val q = s.indexOf('"', s.indexOf(':', tailKey) + 1)
-                if (q < 0) 0 else q + 1
-              }
-            val frag =
-              (if (rawIdx >= 0) s.substring(rawIdx + "\"raw\":{".length)
-               else s.substring(tailStart)).takeWhile(_ != '}')
-            val markerlessOk = s.contains("\"stamp_utc\":") &&
-              !(frag.contains(":{") || frag.contains(":\""))
-            val m =
-              if (rawIdx < 0 && !markerlessOk) Map.empty[String, Double]
-              else kvArr.findAllMatchIn(frag).flatMap { g =>
-                val xs = g.group(2).split(",")
-                  .flatMap(x => scala.util.Try(x.toDouble).toOption)
-                if (xs.nonEmpty) Some(g.group(1) -> xs.min) else None
-              }.toMap
-            if (m.nonEmpty) Some((latest.getName + " (tail fragment)", m))
-            else None
-          }
-        }.toOption.flatten
-      }
-    }
-    fromHistory.orElse(fromDriverTail).getOrElse(("", Map.empty))
+    found.getOrElse(("", Map.empty))
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceBoundedWindowWarn()
-    // untimed warmup: session/codegen/JIT init and first-touch of every
-    // table's read path should not be billed to whichever query happens to
-    // run first (alphabetical order made d_exact_dedup absorb it)
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    Harness.warmUp(spark, sfDir)
     // TWO fixed canaries, timed before/after the suite and interleaved
     // every `canaryEvery` queries — each data-independent enough that its
     // healthy time is a property of the machine, not the code under test:
@@ -199,10 +95,10 @@ object Bench {
       java.nio.file.Files.write(java.nio.file.Paths.get(p), Array.emptyByteArray)
     }
     sampleCanaries()
-    // dev-only: SPARK_GRAFT_BENCH_ONLY=q1_agg,d_simhash narrows the run for
+    // dev-only: SPARK_GRAFT_ONLY=q1_agg,d_simhash narrows the run for
     // iteration; the driver leaves it unset (full suite)
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
+    val queries = Harness.selected
+    val narrowed = queries.size < SparkEntry.queries.size
     // (name, [run seconds...], error) — failures are recorded, never silently
     // ignored. Each query is timed as the BEST of 2 consecutive
     // materializations: a single sample let one environmental stall bill
@@ -215,22 +111,19 @@ object Bench {
     // result), and it is reported as errored only when BOTH runs fail — a
     // transient one-run failure surfaces in "raw"/"flaky", not "errors".
     val windowOf = scala.collection.mutable.Map.empty[String, Int]
-    def timedRun(fn: (SparkSession, String) => DataFrame): (Double, Option[String]) = {
+    def timedRun(fn: Harness.Query): (Double, Option[String]) = {
       val t0 = System.nanoTime()
+      // each run builds the query fresh, so any checkpoint it pinned is
+      // dead weight once materialized — it is freed inside the timed window
+      // (the release IS part of the operator's cost)
       val err =
-        try { materialize(fn(spark, sfDir)); None }
+        try { Harness.run(spark, sfDir, fn)(Harness.materialize); None }
         catch { case e: Throwable =>
           Some(s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(120)}")
         }
-        // each run builds the query fresh, so any checkpoint it pinned is
-        // dead weight once materialized — free it inside the timed window
-        // (the release IS part of the operator's cost)
-        finally ops.Pins.releaseAll()
       ((System.nanoTime() - t0) / 1e9, err)
     }
-    val results0 = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .zipWithIndex.map { case ((name, fn), qi) =>
+    val results0 = queries.zipWithIndex.map { case ((name, fn), qi) =>
       if (qi > 0 && qi % canaryEvery == 0) sampleCanaries()
       windowOf(name) = cpuC.size - 1
       val two = Seq(timedRun(fn), timedRun(fn))
@@ -276,14 +169,14 @@ object Bench {
     // cross-round drift check (r16): the r14 AND r15 driver records were
     // host-distorted while every canary read healthy — contention the
     // canaries didn't sample still billed 6-30x slowdowns to untouched
-    // queries. The repo ships every prior BENCH_r*.json; any query whose
-    // best-of exceeds 3x its prior-round best (and by >= 1 s — sub-second
+    // queries. Any query whose best-of exceeds 3x its best in the prior
+    // same-sf BENCH_HISTORY.jsonl line (and by >= 1 s — sub-second
     // churn is commit noise, not contamination) is SUSPECT and gets the
     // same healthy-host recovery run as a degraded-window query. A genuine
     // regression keeps its slow time through the retry (min-over-successes
     // only improves if the retry is actually faster) and surfaces in
     // drift_vs_prior for a human to read.
-    val (driftBaseline, prior) = priorBest(sfDir)
+    val (driftBaseline, prior) = priorBest(sfDir, HistoryFile)
     def driftOf(bests: Map[String, Double]): Map[String, (Double, Double)] =
       bests.flatMap { case (name, cur) =>
         prior.get(name).collect {
@@ -323,15 +216,13 @@ object Bench {
     }
     val finalBests = results.map { case (n, runs) => n -> best(runs) }.toMap
     val driftFinal = driftOf(finalBests)
-    def jstr(s: String): String =
-      "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"").replace("\n", " ") + "\""
-    val qs = results.map { case (k, v) => s"${jstr(k)}:${best(v)}" }.mkString("{", ",", "}")
-    val raw = results.map { case (k, v) => s"${jstr(k)}:${v.map(_._1).mkString("[", ",", "]")}" }
+    val qs = results.map { case (k, v) => s"${jsonString(k)}:${best(v)}" }.mkString("{", ",", "}")
+    val raw = results.map { case (k, v) => s"${jsonString(k)}:${v.map(_._1).mkString("[", ",", "]")}" }
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, v) if v.forall(_._2.isDefined) =>
-      s"${jstr(k)}:${jstr(v.head._2.get)}" }.mkString("{", ",", "}")
+      s"${jsonString(k)}:${jsonString(v.head._2.get)}" }.mkString("{", ",", "}")
     val flaky = results.collect { case (k, v) if v.exists(_._2.isDefined) && v.exists(_._2.isEmpty) =>
-      s"${jstr(k)}:${jstr(v.collectFirst { case (_, Some(e)) => e }.get)}" }.mkString("{", ",", "}")
+      s"${jsonString(k)}:${jsonString(v.collectFirst { case (_, Some(e)) => e }.get)}" }.mkString("{", ",", "}")
     val total = results.map { case (_, v) => best(v) }.sum
     // run1 total: what a SINGLE cold pass costs — directly comparable to the
     // r1/r2 single-run headline; "value" (min-of-2) is the steady-state
@@ -340,7 +231,7 @@ object Bench {
     def cJson(xs: Seq[Double]): String = xs.map(c => f"$c%.3f").mkString("[", ",", "]")
     def winJson(xs: scala.collection.Seq[Double]): String = results.map { case (k, _) =>
       val w = windowOf(k)
-      s"${jstr(k)}:[${f"${xs(w)}%.3f"},${f"${xs(w + 1)}%.3f"}]"
+      s"${jsonString(k)}:[${f"${xs(w)}%.3f"},${f"${xs(w + 1)}%.3f"}]"
     }.mkString("{", ",", "}")
     // host_degraded marks the record NOT TRUSTWORTHY AS RECORDED: a
     // uniformly slow host (high canary medians — relative checks cannot
@@ -359,11 +250,11 @@ object Bench {
         retryRuns.get(name).exists(_._2.isEmpty))
     val uncured = degraded -- cured
     val hostDegraded = medCpu > 1.0 || medIo > 1.5 || uncured.nonEmpty
-    val retriedJson = degraded.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val uncuredJson = uncured.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val driftSusJson = driftSuspects.toSeq.sorted.map(jstr).mkString("[", ",", "]")
+    val retriedJson = degraded.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
+    val uncuredJson = uncured.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
+    val driftSusJson = driftSuspects.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
     val driftFinalJson = driftFinal.toSeq.sortBy(_._1).map { case (k, (p, c)) =>
-      s"${jstr(k)}:[${f"$p%.3f"},${f"$c%.3f"}]" }.mkString("{", ",", "}")
+      s"${jsonString(k)}:[${f"$p%.3f"},${f"$c%.3f"}]" }.mkString("{", ",", "}")
     // FIELD ORDER IS LOAD-BEARING: the driver records only the LAST 2000
     // characters of stdout, so all sixteen rounds' BENCH_r*.json wrappers
     // hold a fragment that starts mid-line — with the headline printed
@@ -373,7 +264,7 @@ object Bench {
     // summary scalars (totals, health, drift, sf) close the line so they
     // land inside any suffix-truncated capture.
     val line =
-      s"""{"canary":"two interleaved canaries every $canaryEvery queries - cpu: range(5e8).sum, data-independent; io: fixed small parquet read + one 32-task hash shuffle (fresh shuffle files each time, so disk/scheduler contention lands on it). A window is degraded unless BOTH canaries are healthy (<= max(3x median, median+0.5s)) on BOTH sides; degraded-window queries get a healthy-host recovery run. host_degraded = uniform degradation (cpu median > 1s or io median > 1.5s) OR degraded-window queries left WITHOUT a recovery run (uncured_queries) - a cured transient spike stays visible but does not condemn the record. canary_after_sec is the cpu sample that closed the MAIN pass (retry-phase canaries follow in the arrays)","drift":"per-query best-of compared against the same-sf prior round's BENCH_r*.json: > 3x prior AND > prior+1s = suspect -> healthy-host recovery run; drift_vs_prior lists what remains after recovery (genuine regressions or uncured contamination)","timing":"per-query best of 2 runs, +1 tie-breaker run on >2.5x spread between successes or a 1-of-2 failure, +1 recovery run for degraded-window or drift-suspect queries; value_run1 sums first runs (single-run comparable)","query_window_canaries":${winJson(cpuC)},"query_window_canaries_io":${winJson(ioC)},"queries":$qs,"errors":$errs,"flaky":$flaky,"canaries":${cJson(cpuC.toSeq)},"canaries_io":${cJson(ioC.toSeq)},"canary_every":$canaryEvery,"canary_before_sec":${cpuC.head},"canary_after_sec":${cpuC(mainCloseIdx)},"degraded_window_queries":$retriedJson,"uncured_queries":$uncuredJson,"drift_baseline":${jstr(driftBaseline)},"drift_suspect_queries":$driftSusJson,"drift_vs_prior":$driftFinalJson,"raw":$raw,"value_run1":$totalRun1,"host_degraded":$hostDegraded,"stamp_utc":"${java.time.Instant.now}","label":${jstr(sys.env.getOrElse("SPARK_GRAFT_BENCH_LABEL", ""))},"nqueries":${results.size},"metric":"total","value":$total,"unit":"sec","sf":"$sfDir"}"""
+      s"""{"canary":"two interleaved canaries every $canaryEvery queries - cpu: range(5e8).sum, data-independent; io: fixed small parquet read + one 32-task hash shuffle (fresh shuffle files each time, so disk/scheduler contention lands on it). A window is degraded unless BOTH canaries are healthy (<= max(3x median, median+0.5s)) on BOTH sides; degraded-window queries get a healthy-host recovery run. host_degraded = uniform degradation (cpu median > 1s or io median > 1.5s) OR degraded-window queries left WITHOUT a recovery run (uncured_queries) - a cured transient spike stays visible but does not condemn the record. canary_after_sec is the cpu sample that closed the MAIN pass (retry-phase canaries follow in the arrays)","drift":"per-query best-of compared against the last same-sf line of BENCH_HISTORY.jsonl that is not host_degraded: > 3x prior AND > prior+1s = suspect -> healthy-host recovery run; drift_vs_prior lists what remains after recovery (genuine regressions or uncured contamination)","timing":"per-query best of 2 runs, +1 tie-breaker run on >2.5x spread between successes or a 1-of-2 failure, +1 recovery run for degraded-window or drift-suspect queries; value_run1 sums first runs (single-run comparable)","query_window_canaries":${winJson(cpuC)},"query_window_canaries_io":${winJson(ioC)},"queries":$qs,"errors":$errs,"flaky":$flaky,"canaries":${cJson(cpuC.toSeq)},"canaries_io":${cJson(ioC.toSeq)},"canary_every":$canaryEvery,"canary_before_sec":${cpuC.head},"canary_after_sec":${cpuC(mainCloseIdx)},"degraded_window_queries":$retriedJson,"uncured_queries":$uncuredJson,"drift_baseline":${jsonString(driftBaseline)},"drift_suspect_queries":$driftSusJson,"drift_vs_prior":$driftFinalJson,"raw":$raw,"value_run1":$totalRun1,"host_degraded":$hostDegraded,"stamp_utc":"${java.time.Instant.now}","label":${jsonString(sys.env.getOrElse("SPARK_GRAFT_BENCH_LABEL", ""))},"nqueries":${results.size},"metric":"total","value":$total,"unit":"sec","sf":${jsonString(sfDir)}}"""
     // file copy first (survives log interleaving), then the line alone on
     // stdout after Spark is quiet
     java.nio.file.Files.write(java.nio.file.Paths.get(
@@ -381,8 +272,8 @@ object Bench {
       (line + "\n").getBytes("UTF-8"))
     // full-suite runs extend the committed drift baseline; narrowed dev
     // runs must not pollute it
-    if (only.isEmpty)
-      java.nio.file.Files.write(java.nio.file.Paths.get(HistoryFile),
+    if (!narrowed)
+      java.nio.file.Files.write(HistoryFile.toPath,
         (line + "\n").getBytes("UTF-8"),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
@@ -396,7 +287,7 @@ object Bench {
     // data is unchanged: the complete line above, bench_result.json, and
     // BENCH_HISTORY.jsonl all still carry it.
     val compact =
-      s"""{"metric":"total","value":$total,"value_run1":$totalRun1,"nqueries":${results.size},"host_degraded":$hostDegraded,"unit":"sec","sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_run1":$totalRun1,"nqueries":${results.size},"host_degraded":$hostDegraded,"unit":"sec","sf":${jsonString(sfDir)}}"""
     System.out.println(compact)
     System.out.flush()
   }

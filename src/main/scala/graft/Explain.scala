@@ -1,9 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Plan-audit tool: print the formatted physical plan of named declared
-  * queries (all of them with no args) — the `.explain("formatted")`
-  * feedback loop the scale discipline asks for, runnable headless:
+  * queries (with no args, every query `SPARK_GRAFT_ONLY` selects) — the
+  * `.explain("formatted")` feedback loop the scale discipline asks for,
+  * runnable headless:
   *   scripts/run.sh graft.Explain t_winnow d_winnow_overlap
   * Grep the output for the things that matter at 100 TB: PushedFilters on
   * scans, WholeStageCodegen spans, BroadcastHashJoin vs SortMergeJoin on
@@ -11,41 +11,24 @@ import org.apache.spark.sql.SparkSession
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Bench.silenceBoundedWindowWarn()
-    val names =
-      if (args.nonEmpty) args.toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name' — declared: " +
-          SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
+    val queries =
+      if (args.nonEmpty) args.toSeq.map(name => name -> Harness.query(name))
+      else Harness.selected
+    queries.foreach { case (name, fn) =>
       println(s"\n==== $name ====")
       // SPARK_GRAFT_EXPLAIN_EXEC=1: materialize first and print the FINAL
       // AQE-resolved physical plan — the only place runtime decisions
       // (ColumnarToRow under the vectorized connector path, AQE join
       // rewrites, coalesced reads) are visible
-      try {
-        val df = fn(spark, sfDir)
+      Harness.run(spark, sfDir, fn) { df =>
         if (sys.env.get("SPARK_GRAFT_EXPLAIN_EXEC").contains("1")) {
-          df.queryExecution.toRdd.foreachPartition(
-            (it: Iterator[_]) => while (it.hasNext) it.next())
+          Harness.materialize(df)
           println(df.queryExecution.executedPlan.toString)
         } else println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
       }
-      // incremental-store queries pin checkpoints at CONSTRUCTION time;
-      // release per query or an all-queries audit accumulates them
-      finally ops.Pins.releaseAll()
     }
     spark.stop()
   }

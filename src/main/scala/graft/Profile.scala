@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev profiling tool (guide §1): run named declared queries and print
   * every Spark JOB the run launched — wall seconds, task-time seconds,
@@ -19,18 +18,8 @@ object Profile {
         scala.collection.mutable.ArrayBuffer.empty)
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Bench.silenceBoundedWindowWarn()
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
     val jobs = scala.collection.concurrent.TrieMap.empty[Int, JobRec]
     val stageToJob = scala.collection.concurrent.TrieMap.empty[Int, Int]
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -64,30 +53,17 @@ object Profile {
       }
     })
     // same untimed warmup as Bench so first-query numbers are comparable
-    spark.range(1000000).selectExpr("sum(id)").collect()
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => () }
-    }
-    def materialize(df: org.apache.spark.sql.DataFrame): Long =
-      df.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator.single(n)
-      }.fold(0L)(_ + _)
+    Harness.warmUp(spark, sfDir)
     val runs = sys.env.get("SPARK_GRAFT_PROFILE_RUNS").map(_.toInt).getOrElse(1)
     args.foreach { name =>
-      val fn = SparkEntry.queries.getOrElse(name,
-        sys.error(s"unknown query '$name'"))
+      val fn = Harness.query(name)
       (1 to runs).foreach { runIdx =>
         jobs.clear(); stageToJob.clear()
         val t0 = System.nanoTime()
-        try materialize(fn(spark, sfDir))
-        finally ops.Pins.releaseAll()
+        Harness.run(spark, sfDir, fn)(Harness.materialize)
         val wall = (System.nanoTime() - t0) / 1e9
-        // listener events are async; give the bus a moment to drain
-        Thread.sleep(300)
+        // listener events are async: wait until the bus has delivered them
+        org.apache.spark.ListenerBusDrain(spark.sparkContext)
         println(f"%n==== $name run $runIdx: wall $wall%.3f s, ${jobs.size} jobs ====")
         val recs = jobs.values.toSeq.sortBy(_.t0)
         val base = recs.headOption.map(_.t0).getOrElse(0L)

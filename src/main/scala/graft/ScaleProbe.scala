@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev scaling probe (r18, guide §2): the declared suite at sf0.1 is
@@ -23,26 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val sfDir = Harness.sfDir
     val rep = args.headOption.map(_.toInt).getOrElse(24)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    Bench.silenceBoundedWindowWarn()
-
-    def materialize(df: DataFrame): Long =
-      df.queryExecution.toRdd.mapPartitions { it =>
-        var n = 0L
-        while (it.hasNext) { it.next(); n += 1 }
-        Iterator.single(n)
-      }.fold(0L)(_ + _)
+    val spark = Harness.session()
 
     /** `rep` copies of the frame, ids disambiguated by the copy index,
       * MATERIALIZED to a temp parquet outside every timed region — probes
@@ -131,13 +114,13 @@ object ScaleProbe {
       // best of 2: same discipline as the bench
       val ts = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        materialize(mk())
+        Harness.materialize(mk())
         (System.nanoTime() - t0) / 1e9
       }
       name -> ts.min
     }
     spark.stop()
-    println(results.map { case (k, v) => s""""$k":$v""" }
-      .mkString("{", ",", s""","cpus":$cpus,"rep":$rep,"sf":"$sfDir"}"""))
+    println(results.map { case (k, v) => s"${Harness.jsonString(k)}:$v" }.mkString("{", ",",
+      s""","cpus":${Harness.cpus},"rep":$rep,"sf":${Harness.jsonString(sfDir)}}"""))
   }
 }
